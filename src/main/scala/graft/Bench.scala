@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import scala.util.control.NonFatal
@@ -100,24 +99,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalSession.cpus
     // stale-JVM sweep BEFORE our own session spins up: frees their cores and memory for
     // the whole run instead of letting them tax every rep (r7 verdict #1)
     val killedJvms = try killStaleBuildJvms() catch { case NonFatal(_) => Nil }
     if (killedJvms.nonEmpty)
       System.err.println(s"[bench] killed stale build JVMs: ${killedJvms.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Spark 4.1's async checksum writer can park streaming tasks forever under
-      // local-mode load (see SparkTestSession); cdc_txn_reconstruct_stream runs here
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // events.ts is TIMESTAMP(NANOS) → LongType (see engine.Tables)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     // f"" uses the JVM default locale — a de_DE machine would print decimal COMMAS and
     // corrupt the JSON; all numeric formatting here goes through Locale.ROOT
     def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Spot-measure named queries. Same warmup as [[Bench]] (a first measurement would
   * otherwise absorb ~4-7 s of session init + codegen — VERDICT r5); set
@@ -7,25 +6,9 @@ import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // same SPARK_GRAFT_CPUS knob as Bench: a spot measurement exists to sanity-check a
-    // bench number, so it must run under the same parallelism/shuffle fan-out
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // shuffle fan-out decouples from thread count for derived-scale posture runs: at
-    // sf10 (100× bench data) a fixed 32 shuffle partitions carries 100× rows PER
-    // PARTITION, which overwhelms a constrained per-slot heap by construction — a real
-    // cluster scales partition count with data volume. Default stays = cpus.
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // Spark 4 defaults AQE ON and every gate/bench runs that way; the off-switch exists
-      // to measure what adaptive re-planning buys/costs (BASELINE.md AQE note, r7 #6)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the same session as Bench: a spot measurement exists to sanity-check a bench
+    // number, so it must run under the same parallelism/shuffle fan-out
+    val spark = LocalSession()
     // spill accounting (r8 verdict #7): the constrained-heap posture runs need evidence
     // that queries COMPLETE-BY-SPILLING under memory pressure, not just wall time — sum
     // executor spill bytes per query from stage completions

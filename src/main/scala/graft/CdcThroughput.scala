@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.cdc.{Catalog, CdcConfig, CdcPipeline, EnvelopeApply, RedoEvent}
@@ -86,25 +86,8 @@ object CdcThroughput {
     val sfDir = args(0)
     val waves = args.lift(1).map(_.toInt).getOrElse(8)
     val filesPerWave = args.lift(2).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATESTORE", "hdfs")
-    // r18 ADVICE: anything other than exactly "rocksdb" used to silently fall back to
-    // the in-heap store while the output JSON echoed the raw string — a typo'd run
-    // masqueraded as a valid posture measurement. Fail loudly before the session.
-    require(Set("hdfs", "rocksdb").contains(stateStore),
-      s"SPARK_GRAFT_STATESTORE must be 'hdfs' or 'rocksdb', got '$stateStore'")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val spark = (if (stateStore == "rocksdb")
-      builder.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val stateStore = LocalSession.stateStore
+    val spark = LocalSession()
     import spark.implicits._
 
     val feedDir = s"target/cdc_feed_${new java.io.File(sfDir).getName}"

@@ -1,23 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints the formatted physical plan of each named query (all if no
   * args) against SPARK_GRAFT_SF_DIR — the `.explain` loop the 100 TB posture demands:
   * check PushedFilters reach the scan, small sides broadcast, codegen spans are wide. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // streaming-harness queries EXECUTE at construction; without this the Spark 4.1
-      // async checksum writer can park their tasks forever (see SparkTestSession)
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSession(threads = 4, shufflePartitions = Some(4))
     spark.sparkContext.setLogLevel("ERROR")
     // default run skips queries whose construction runs a full streaming harness — name
     // them explicitly to include them

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -44,14 +44,7 @@ object GenScale {
         s"unknown table(s) ${unknown.mkString(",")}; known: ${knownTables.toSeq.sorted.mkString(",")}")
     }
     def want(t: String): Boolean = only.forall(_.contains(t))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(shufflePartitions = Some(32))
     import spark.implicits._
 
     // via Tables: `ts` arrives as the canonical nanos-long whatever the source dir's

@@ -78,18 +78,10 @@ object SparkEntry {
     // shape at saturated fingerprint cardinality; the star closure is the scale form):
     "dedup_image_phash" -> "dedup_image_phash_stars",
     "dedup_image_phash3" -> "dedup_image_phash_stars",
-    // r20 (VERDICT r19 #1): the broadcast boilerplate anti-join REFUSES past
-    // guardBroadcast's 10M-row bound (r19 sf1000 probe: named trip at 54.5M segments);
-    // the _rel form runs the same anti-join as a shuffled sort-merge join on the
-    // segment key — no broadcast bound, same oracle, row-identical at every scale
-    // both can run (LineDedupScalePathSpec):
-    "text_line_dedup" -> "text_line_dedup_rel",
-    // r17 sf100 probe, measured-fatal (disk watchdog kills), count-gated: the batch
+    // r17 sf100 probe, measured-fatal (disk watchdog kill), count-gated: the batch
     // assembly's feed-sized xid shuffle → the streaming assembler (whose file-fed
-    // full-chain form is graft.CdcThroughput); prefold's 3× state materialization →
-    // the default native envelope fold:
+    // full-chain form is graft.CdcThroughput):
     "cdc_txn_reconstruct" -> "cdc_txn_reconstruct_stream",
-    "cdc_apply_merge_prefold" -> "cdc_apply_merge",
     // r17 in-place fix shipped for events_range_join (prefix-sum form, value-identical,
     // 1500 s timeout → 14.6 s at sf100), so it needs no scale-path entry; the
     // documented-expensive cdc_scd2_incremental anchor reuses its persisted prior

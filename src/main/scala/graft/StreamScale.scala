@@ -387,28 +387,14 @@ object StreamScale {
         s"unknown workload(s) ${unknown.mkString(",")}; known: ${allWorkloads.mkString(",")}")
     }
     def want(w: String): Boolean = only.forall(_.contains(w))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // State-store posture knob (r19, VERDICT r18 #6 — extending the CdcThroughput r18
     // RocksDB row to the replica/apply and SCD2 stateful workloads): rocksdb switches
     // every workload's state to Spark's RocksDB provider (state ≫ heap); the reported
     // state_mem_peak_mb is then the JVM-side usage the provider reports, beside the
     // in-heap rows of the r8/r9 tables. Validated loudly (ADVICE r18): a typo must
     // not masquerade as a posture measurement.
-    val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATESTORE", "hdfs")
-    require(Set("hdfs", "rocksdb").contains(stateStore),
-      s"SPARK_GRAFT_STATESTORE must be 'hdfs' or 'rocksdb', got '$stateStore'")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val spark = (if (stateStore == "rocksdb")
-      builder.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val stateStore = LocalSession.stateStore
+    val spark = LocalSession()
 
     def emit(workload: String, m: Metrics): Unit =
       println(String.format(java.util.Locale.ROOT,

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,21 +12,7 @@ object Verify {
     }
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // same derived-scale posture knob as BenchOne: at sf10 a fan-out pinned to the
-      // thread count carries 100× rows per shuffle partition and OOMs by construction
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Spark 4.1's async checksum writer can park streaming tasks forever under
-      // local-mode load (see SparkTestSession); cdc_txn_reconstruct_stream runs here
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // events.ts is TIMESTAMP(NANOS) → LongType (see engine.Tables)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     // per-query time limit: one wedged query (e.g. a parked streaming harness) must cost
     // itself, not zero the whole round's correctness dump; on timeout any stray streaming

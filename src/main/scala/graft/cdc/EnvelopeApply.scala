@@ -12,39 +12,33 @@ import org.apache.spark.sql.types._
  * to a replica. Envelope null rules per operation are the reference's
  * (Utils:389-415): INSERT/UPDATE carry `data`, DELETE carries only `before`.
  *
- * Spark shape (100 TB posture): the DEFAULT batch path is [[applyNative]] — ONE scan,
- * ONE exchange (the snapshot join reuses the aggregation's partitioning), and per-key
- * aggregation state bounded by the COLUMN COUNT via the custom
- * [[graft.functions.EnvelopeFold]] TypedImperativeAggregate with map-side partial
- * aggregation. Two declarative twins stay registered as semantics references,
- * equivalence pinned by EnvelopeApplySpec's 300-scenario property test:
- * [[applyFolded]] (collect the sorted history, fold with an `aggregate` HOF — same
- * one-exchange plan, but the per-key buffer is the WHOLE change history and the
- * comparator-lambda sort + fold stay interpreted; a million-update hot key OOMs the
- * buffer) and [[applyPrefolded]] (pure-declarative bounded state, paying one extra
- * (key, column) exchange for it). No window over the whole stream, no driver-side
- * state in any path.
+ * Two appliers share one MERGE stage ([[applyChanges]]): the batch [[apply]] and the
+ * micro-batch [[applyStreaming]] (replayed through [[latestChanges]]). The batch plan is
+ * ONE scan and ONE exchange (the snapshot join reuses the aggregation's partitioning),
+ * with per-key aggregation state bounded by the COLUMN COUNT via the custom
+ * [[graft.functions.EnvelopeFold]] TypedImperativeAggregate and map-side partial
+ * aggregation. No window over the whole stream, no driver-side state in either path.
  */
 object EnvelopeApply {
 
   /** PK extraction from the envelope payload: the key lives in `data` for INSERT/UPDATE
     * and only in `before` for DELETE; payload keys are the redo statement's UPPERCASE
-    * identifiers. ONE definition — the batch, prefolded and streaming appliers must
-    * extract identically or they silently diverge on the same envelope. */
+    * identifiers. ONE definition — the batch and streaming appliers must extract
+    * identically or they silently diverge on the same envelope. */
   private def rawPkValue(p: String): Column = {
     val k = p.toUpperCase(java.util.Locale.ROOT)
     coalesce(col("data").getItem(k), col("before").getItem(k))
   }
 
-  /** [[rawPkValue]] re-typed to the table's column types (the catalog cast rule). */
-  private def typedKeyCols(pk: Seq[String], schema: StructType): Seq[Column] =
-    pk.map(p => Catalog.castValue(rawPkValue(p), schema(p).dataType).as(p))
-
   /**
-   * DEFAULT batch apply — routes to [[applyNative]] (r7): one exchange like the HOF
-   * fold, per-key state bounded by the column count like the prefold, via the custom
-   * [[graft.functions.EnvelopeFold]] Catalyst aggregate. The declarative twins stay
-   * available as [[applyFolded]] / [[applyPrefolded]], equivalence property-pinned.
+   * Batch apply: groups the envelope on the PK and folds each key's events with
+   * `envelope_fold` — a [[graft.functions.EnvelopeFold]]
+   * [[org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate]]
+   * maintaining (last op, INSERT/DELETE boundary, per-COLUMN winners) imperatively.
+   * INSERT replaces the row image, DELETE tombstones, any other operation overlays its
+   * payload by key presence, in `(commit_scn, scn, seq)` order. The shuffle carries at
+   * most one winner per (key, column), not the change history, and the maxima are
+   * order-insensitive, so no per-key sort exists anywhere in the plan.
    *
    * @param snapshot  current table state, columns = `schema` (keys unique)
    * @param enveloped [[CdcPipeline.envelope]] output for ONE table, with `commit_scn`
@@ -52,32 +46,17 @@ object EnvelopeApply {
    *                  the reference's commit-ordered emission, LogMinerThread2.java:158-298)
    * @param schema    table schema carrying pk flags ([[Catalog.withKeyMetadata]])
    */
-  def apply(snapshot: DataFrame, enveloped: DataFrame, schema: StructType): DataFrame =
-    applyNative(snapshot, enveloped, schema)
-
-  /**
-   * The NATIVE-AGGREGATE apply (the DEFAULT since r7): groups the envelope on the PK and
-   * folds each key's events with `envelope_fold` — a [[graft.functions.EnvelopeFold]]
-   * [[org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate]]
-   * maintaining (last op, INSERT/DELETE boundary, per-COLUMN winners) imperatively.
-   * Best of both declarative twins: ONE exchange (the snapshot join reuses the
-   * aggregation's hash partitioning, same plan shape as [[applyFolded]]) AND per-key
-   * state bounded by the column count with map-side partial aggregation (same bound as
-   * [[applyPrefolded]] — the shuffle carries at most one winner per (key, column), not
-   * the change history). Order-insensitive maxima under `(commit_scn, scn, seq)`, so no
-   * per-key sort exists anywhere in the plan.
-   */
-  def applyNative(snapshot: DataFrame, enveloped: DataFrame, schema: StructType): DataFrame = {
+  def apply(snapshot: DataFrame, enveloped: DataFrame, schema: StructType): DataFrame = {
     val pk = Catalog.effectiveKeys(schema)
     require(pk.nonEmpty, "schema carries no pk/uq key metadata — see Catalog.withKeyMetadata")
-    // register on the session that will ANALYZE this plan (ADVICE r6): Dataset ops
+    // register on the session that will ANALYZE this plan: Dataset ops
     // analyze against their OWN session, and the agg below is built on `enveloped` —
     // snapshot's session only analyzes the final join, which needs no function lookup
     graft.functions.EnvelopeFold.ensureRegistered(enveloped.sparkSession)
-    val keyCols = typedKeyCols(pk, schema)
-    // explicit casts keep the declarative defaults' coercion behavior: the aggregate's
-    // type gate is exact (bigint ordering columns), while a JSON/JDBC-sourced envelope
-    // may carry int/decimal ordering columns
+    // the typed key columns (catalog cast rule), then explicit ordering casts: the
+    // aggregate's type gate is exact (bigint ordering columns), while a JSON/JDBC-sourced
+    // envelope may carry int/decimal ordering columns
+    val keyCols = pk.map(p => Catalog.castValue(rawPkValue(p), schema(p).dataType).as(p))
     val keyed = enveloped.select(keyCols ++ Seq(
       col("commit_scn").cast("long").as("commit_scn"), col("scn").cast("long").as("scn"),
       col("seq").cast("long").as("seq"), col("operation"), col("data")): _*)
@@ -86,133 +65,6 @@ object EnvelopeApply {
         col("commit_scn"), col("scn"), col("seq"), col("operation"), col("data")).as("f"))
     applyChanges(snapshot, changes, schema)
   }
-
-  /**
-   * The single-shuffle FOLD apply (the default through r6): group events on the PK, fold
-   * the `(commit_scn, scn, seq)`-sorted per-key history with an `aggregate` HOF, join the
-   * snapshot once on the aggregate's own partitioning. Per-key buffer is the WHOLE change
-   * history (fine under normal per-key change volume, pathological for a million-update
-   * hot key) and the comparator-lambda `array_sort` + `aggregate` stay interpreted — use
-   * [[apply]]/[[applyPrefolded]] unless the two saved exchanges are known to dominate.
-   */
-  def applyFolded(snapshot: DataFrame, enveloped: DataFrame, schema: StructType): DataFrame = {
-    val pk = Catalog.effectiveKeys(schema)
-    require(pk.nonEmpty, "schema carries no pk/uq key metadata — see Catalog.withKeyMetadata")
-
-    val keyCols = typedKeyCols(pk, schema)
-    val keyed = enveloped.select(
-      keyCols :+ struct(col("commit_scn"), col("scn"), col("seq"),
-        col("operation"), col("data")).as("e"): _*)
-
-    // total order within a key; struct<..., map> is not orderable, so sort_array is out —
-    // a comparator lambda over the ordering fields keeps the map payload along for free
-    def cmp(name: String)(l: Column, r: Column): Column =
-      when(l.getField(name) < r.getField(name), -1)
-        .when(l.getField(name) > r.getField(name), 1).otherwise(0)
-    val byCommitOrder = (l: Column, r: Column) => {
-      val c1 = cmp("commit_scn")(l, r)
-      val c2 = cmp("scn")(l, r)
-      when(c1 =!= 0, c1).otherwise(when(c2 =!= 0, c2).otherwise(cmp("seq")(l, r)))
-    }
-
-    val emptyMap = map().cast(MapType(StringType, StringType))
-    def state(deleted: Column, m: Column, replaced: Column) =
-      struct(deleted.as("deleted"), m.as("m"), replaced.as("replaced"))
-    // fold the ordered events into (deleted, column map, replaced): INSERT replaces
-    // wholesale (`replaced` marks the snapshot image as superseded — unlisted columns are
-    // NULL, not the stale snapshot value), UPDATE overlays key-presence-wise (an explicit
-    // null-valued entry — `SET col = NULL` — WINS over the accumulated value; coalesce
-    // would silently keep the stale one, ADVICE r4), DELETE tombstones; an INSERT after a
-    // DELETE resurrects the key
-    val folded = aggregate(
-      array_sort(collect_list(col("e")), byCommitOrder),
-      state(lit(false), emptyMap, lit(false)),
-      (acc, e) => {
-        val data = coalesce(e.getField("data"), emptyMap)
-        val overlaid = map_concat(
-          map_filter(acc.getField("m"), (k, _) => !map_contains_key(data, k)), data)
-        when(e.getField("operation") === RedoEvent.Insert, state(lit(false), data, lit(true)))
-          .when(e.getField("operation") === RedoEvent.Delete,
-            state(lit(true), emptyMap, lit(true)))
-          .otherwise(state(lit(false), overlaid, acc.getField("replaced")))
-      })
-    val changes = keyed.groupBy(pk.map(col): _*).agg(folded.as("f"))
-    applyChanges(snapshot, changes, schema)
-  }
-
-  /**
-   * The PRE-FOLDED batch apply (VERDICT r5 #7; the DEFAULT behind [[apply]] since r7) —
-   * semantically identical to [[applyFolded]] but with per-key aggregation state bounded
-   * by the COLUMN COUNT, not the history length: the fold's `collect_list` holds one
-   * key's whole change history in one buffer (fine under normal per-key change volume,
-   * pathological for a million-update hot key). This
-   * variant exploits the fold's closed form — the final state only depends on
-   *   - the LAST event's operation (`deleted` = it was a DELETE),
-   *   - the last INSERT/DELETE "boundary" B (`replaced` = B exists; INSERT replaces the
-   *     row image wholesale, so nothing before B can contribute), and
-   *   - the per-column LAST value among INSERT/UPDATE events at-or-after B
-   * — so it computes exactly those with bounded aggregates, in a SINGLE SCAN of the
-   * envelope and TWO exchanges. `explode_outer` turns each event into one row per payload
-   * entry, and — because it emits exactly one null-column row for a DELETE or an
-   * empty-payload event — every event contributes at least one row, so the per-(key,
-   * column) groups collectively see every event: each group's `max_by(op, ord)` /
-   * `max(boundary ord)` roll up to the per-key `last_op` / `b_ord` in the second
-   * aggregation (the group holding the key's max ord came from the key's LAST event).
-   * The winners-at-or-after-B filter then runs as an array `filter` over the per-key
-   * winner list — bounded by the column count — instead of a bounds⟗winners self-join.
-   * Explicit SQL-NULL entries survive explode/max_by/map_from_entries, so SET-col-NULL
-   * semantics are preserved (the winner value rides in a struct so a null VALUE is
-   * distinguishable from no winner).
-   *
-   * vs the r6 shape (cache + boundary pass + winner pass + two self-joins): one scan
-   * instead of two, no pinned cache, and two exchanges — (key, column) with map-side
-   * combine, then key, which the snapshot join reuses. Cost of the bound vs the fold:
-   * one extra exchange — the classic buffer-vs-shuffle trade. Equivalence to
-   * [[applyFolded]] is pinned by EnvelopeApplySpec's 300-scenario property test and the
-   * `cdc_apply_merge_folded` oracle row.
-   */
-  def applyPrefolded(snapshot: DataFrame, enveloped: DataFrame, schema: StructType): DataFrame = {
-    val pk = Catalog.effectiveKeys(schema)
-    require(pk.nonEmpty, "schema carries no pk/uq key metadata — see Catalog.withKeyMetadata")
-    val keyCols = typedKeyCols(pk, schema)
-    val pkc = pk.map(col)
-    val emptyMap = map().cast(MapType(StringType, StringType, valueContainsNull = true))
-    // one row per (event, payload entry) for INSERT/UPDATE; exactly one (c=null) marker
-    // row for DELETE (when() yields a null map) and for an empty payload — explode_outer
-    // keeps those rows, a plain explode would drop the event entirely
-    val exploded = enveloped.select(keyCols ++ Seq(
-      struct(col("commit_scn"), col("scn"), col("seq")).as("ord"),
-      col("operation").as("op"),
-      explode_outer(when(col("operation").isin(RedoEvent.Insert, RedoEvent.Update),
-        coalesce(col("data"), emptyMap))).as(Seq("c", "v"))): _*)
-    val perCol = exploded.groupBy(pkc :+ col("c"): _*).agg(
-      max_by(struct(col("v")), col("ord")).as("w"),
-      max(col("ord")).as("w_ord"),
-      max_by(col("op"), col("ord")).as("g_op"),
-      max(when(col("op").isin(RedoEvent.Insert, RedoEvent.Delete), col("ord"))).as("g_b"))
-    val perKey = perCol.groupBy(pkc: _*).agg(
-      max_by(col("g_op"), col("w_ord")).as("last_op"),
-      max(col("g_b")).as("b_ord"),
-      // collect_list skips the null produced for marker groups, so `es` holds only real
-      // column winners — at most one entry per payload column
-      collect_list(when(col("c").isNotNull,
-        struct(col("c"), col("w.v").as("v"), col("w_ord")))).as("es"))
-    val changes = perKey.select(pkc :+ struct(
-      (col("last_op") === RedoEvent.Delete).as("deleted"),
-      map_from_entries(transform(
-        filter(col("es"), e => col("b_ord").isNull || e.getField("w_ord") >= col("b_ord")),
-        e => struct(e.getField("c").as("c"), e.getField("v").as("v")))).as("m"),
-      col("b_ord").isNotNull.as("replaced")).as("f"): _*)
-    applyChanges(snapshot, changes, schema)
-  }
-
-  /** Compatibility shim from the r6 prefold, whose plan pinned an internal cache and
-    * returned a release thunk to unpersist it. The single-scan plan above holds no cache,
-    * so the handle is a no-op — kept so long-lived callers written against the r6 API
-    * still compile and release() stays safe to call. */
-  def applyPrefoldedWithHandle(snapshot: DataFrame, enveloped: DataFrame,
-                               schema: StructType): (DataFrame, () => Unit) =
-    (applyPrefolded(snapshot, enveloped, schema), () => ())
 
   /**
    * Final MERGE stage shared by the batch fold above and the streaming fold below:

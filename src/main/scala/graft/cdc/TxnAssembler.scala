@@ -126,6 +126,35 @@ object TxnAssembler {
     (out.result(), if (open && (buf.started || buf.rows.nonEmpty)) Some(buf) else None)
   }
 
+  /** One micro-batch of one xid for the streaming assemblers: sort the batch's events,
+    * resume the CSF fragment run carried in state (A7 across micro-batches), run [[step]],
+    * and store the next state — the open buffer and/or the new trailing fragment run —
+    * or remove it. `onStored` arms the caller's timeout on a stored state, given the
+    * batch's sorted events. Returns the transactions committed in this batch. */
+  private def stepBatch(it: Iterator[RedoEvent], state: GroupState[TxnBuffer],
+                        maxBufferedRows: Int,
+                        droppedTxns: Option[org.apache.spark.util.LongAccumulator],
+                        headFilter: RedoEvent => Boolean)
+                       (onStored: Vector[RedoEvent] => Unit): List[CommittedDml] = {
+    val sorted = it.toVector.sortBy(e => (e.scn, e.seq, e.rowId))
+    val prev = state.getOption.getOrElse(TxnBuffer.empty)
+    val (fusedEvs, carry) = Csf.fuseAdjacent(sorted.iterator, prev.frags, headFilter)
+    val (emitted, remaining) = step(prev.copy(frags = Nil),
+      fusedEvs.iterator, maxBufferedRows, () => droppedTxns.foreach(_.add(1)))
+    val next = remaining match {
+      case Some(buf)              => Some(buf.copy(frags = carry.toList))
+      case None if carry.nonEmpty => Some(TxnBuffer.empty.copy(frags = carry.toList))
+      case None                   => None
+    }
+    next match {
+      case Some(buf) =>
+        state.update(buf)
+        onStored(sorted)
+      case None => if (state.exists) state.remove()
+    }
+    emitted
+  }
+
   /** Batch-mode assembly: group by xid, sort by SCN within the group, fuse CSF fragment
     * runs (A7 — fragments share the xid, so fusion rides the same shuffle as assembly:
     * no extra exchange), then run the state machine. A truncated trailing run is flushed
@@ -236,28 +265,14 @@ object TxnAssembler {
             Iterator.single(TxnOut(None,
               Some(AbandonedTxn(xid, buf.n + buf.frags.size, "abandon_timeout"))))
           } else {
-            val sorted = it.toVector.sortBy(e => (e.scn, e.seq, e.rowId))
-            val prev = state.getOption.getOrElse(TxnBuffer.empty)
-            val (fusedEvs, carry) = Csf.fuseAdjacent(sorted.iterator, prev.frags, headFilter)
-            val (emitted, remaining) = step(prev.copy(frags = Nil),
-              fusedEvs.iterator, maxBufferedRows, () => droppedTxns.foreach(_.add(1)))
-            val next = remaining match {
-              case Some(buf)              => Some(buf.copy(frags = carry.toList))
-              case None if carry.nonEmpty => Some(TxnBuffer.empty.copy(frags = carry.toList))
-              case None                   => None
-            }
-            next match {
-              case Some(buf) =>
-                state.update(buf)
-                // expire when the WATERMARK passes this txn's newest event + timeout; the
-                // max() keeps the arm legal (it must exceed the current watermark) for a
-                // buffer whose events are already close behind it
-                val lastEventMs = sorted.lastOption.map(_.timestamp.getTime).getOrElse(0L)
-                state.setTimeoutTimestamp(
-                  math.max(lastEventMs + timeoutMsTotal, state.getCurrentWatermarkMs() + 1))
-              case None => if (state.exists) state.remove()
-            }
-            emitted.iterator.map(d => TxnOut(Some(d), None))
+            stepBatch(it, state, maxBufferedRows, droppedTxns, headFilter) { sorted =>
+              // expire when the WATERMARK passes this txn's newest event + timeout; the
+              // max() keeps the arm legal (it must exceed the current watermark) for a
+              // buffer whose events are already close behind it
+              val lastEventMs = sorted.lastOption.map(_.timestamp.getTime).getOrElse(0L)
+              state.setTimeoutTimestamp(
+                math.max(lastEventMs + timeoutMsTotal, state.getCurrentWatermarkMs() + 1))
+            }.iterator.map(d => TxnOut(Some(d), None))
           }
       }
   }
@@ -283,25 +298,9 @@ object TxnAssembler {
             state.remove()
             Iterator.empty
           } else {
-            val sorted = it.toVector.sortBy(e => (e.scn, e.seq, e.rowId))
-            val prev = state.getOption.getOrElse(TxnBuffer.empty)
-            // A7 across micro-batches: resume the open fragment run carried in state, hold
-            // the new trailing open run (if any) for the next batch
-            val (fusedEvs, carry) = Csf.fuseAdjacent(sorted.iterator, prev.frags, headFilter)
-            val (emitted, remaining) = step(prev.copy(frags = Nil),
-              fusedEvs.iterator, maxBufferedRows, () => droppedTxns.foreach(_.add(1)))
-            val next = remaining match {
-              case Some(buf)               => Some(buf.copy(frags = carry.toList))
-              case None if carry.nonEmpty  => Some(TxnBuffer.empty.copy(frags = carry.toList))
-              case None                    => None
-            }
-            next match {
-              case Some(buf) =>
-                state.update(buf)
-                abandonedTxnTimeout.foreach(state.setTimeoutDuration)
-              case None => if (state.exists) state.remove()
-            }
-            emitted.iterator
+            stepBatch(it, state, maxBufferedRows, droppedTxns, headFilter) { _ =>
+              abandonedTxnTimeout.foreach(state.setTimeoutDuration)
+            }.iterator
           }
       }
   }

@@ -156,6 +156,22 @@ object CdcQueries {
       .groupBy($"status").agg(count(lit(1)).as("cnt"))
   }
 
+  /** Envelope-apply (MERGE/upsert) over a deterministic event script on orders (updates
+    * for %3, a later multi-column update for %9, deletes for %10, inserts of NEW keys for
+    * %4, then an update of a freshly-inserted key for %8) rendered to real redo SQL,
+    * parsed, enveloped, and replayed onto the orders snapshot by [[EnvelopeApply]] in
+    * (commit_scn, scn, seq) order. commit_scn is constant so the scn/seq fallback of the
+    * ordering is exercised. Oracle: DuckDB computes the same final state with CASE
+    * arithmetic — a green hash proves insert/overlay/tombstone/resurrect fold semantics
+    * AND the pk-metadata-driven join, end to end. */
+  private def applyMerge(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val snapshot = Tables(s, dir, "orders")
+      .select($"o_orderkey", $"o_orderstatus", $"o_orderpriority")
+    val schema = Catalog.withKeyMetadata(snapshot.schema, Set("o_orderkey"))
+    EnvelopeApply(snapshot, mergeEnvelope(s, dir, lit(true)), schema).orderBy($"o_orderkey")
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A12+A16+A13: render INSERT redo from nation, parse it back, catalog-cast to types.
     // Oracle: the nation table itself — exact round-trip.
@@ -512,33 +528,12 @@ object CdcQueries {
         .groupBy($"status").agg(count(lit(1)).as("cnt"))
         .orderBy($"status")
     },
-    // Envelope-apply (MERGE/upsert) — the consumer's last mile: a deterministic event
-    // script over orders (updates for %3, a later multi-column update for %9, deletes for
-    // %10, inserts of NEW keys for %4, then an update of a freshly-inserted key for %8)
-    // rendered to real redo SQL, parsed, enveloped, and replayed onto the orders snapshot
-    // by [[EnvelopeApply]] in (commit_scn, scn, seq) order. commit_scn is constant so the
-    // comparator's scn/seq fallback is exercised. Oracle: DuckDB computes the same final
-    // state with CASE arithmetic — a green hash proves insert/overlay/tombstone/resurrect
-    // fold semantics AND the pk-metadata-driven join, end to end.
-    "cdc_apply_merge" -> { (s, dir) =>
-      import s.implicits._
-      val snapshot = Tables(s, dir, "orders")
-        .select($"o_orderkey", $"o_orderstatus", $"o_orderpriority")
-      val schema = Catalog.withKeyMetadata(snapshot.schema, Set("o_orderkey"))
-      EnvelopeApply(snapshot, mergeEnvelope(s, dir, lit(true)), schema).orderBy($"o_orderkey")
-    },
-    // The single-shuffle HOF-FOLD apply (the default through r6; r7 flipped the default
-    // to the native EnvelopeFold aggregate, which cdc_apply_merge now exercises) over
-    // the SAME merge script and oracle as cdc_apply_merge: a green hash here plus the
-    // 300-scenario property spec pins applyFolded ≡ applyPrefolded ≡ applyNative.
-    "cdc_apply_merge_folded" -> { (s, dir) =>
-      import s.implicits._
-      val snapshot = Tables(s, dir, "orders")
-        .select($"o_orderkey", $"o_orderstatus", $"o_orderpriority")
-      val schema = Catalog.withKeyMetadata(snapshot.schema, Set("o_orderkey"))
-      EnvelopeApply.applyFolded(snapshot, mergeEnvelope(s, dir, lit(true)), schema)
-        .orderBy($"o_orderkey")
-    },
+    // Envelope-apply (MERGE/upsert) — the consumer's last mile, see [[applyMerge]].
+    // `_folded` and `_prefold` name retired twin plans of the same apply; both stay
+    // registered as aliases of the one builder, gated by the same oracle.
+    "cdc_apply_merge" -> applyMerge _,
+    "cdc_apply_merge_folded" -> applyMerge _,
+    "cdc_apply_merge_prefold" -> applyMerge _,
     // MULTI-TABLE ROUTING -> APPLY — the realistic consumer in one pass: ONE mixed wire
     // stream (orders + customer scripts unioned pre-parse), parsed and enveloped ONCE,
     // split by the A22 topic column, each branch applied onto its own snapshot with its
@@ -572,24 +567,6 @@ object CdcQueries {
               countDistinct($"c_mktsegment").as("n_vals"))
             .select(lit("CUSTOMER").as("tbl"), $"n_rows", $"min_key", $"max_key", $"n_vals"))
         .orderBy($"tbl")
-    },
-    // The declarative BOUNDED-state apply (single-scan explode_outer + two-level rollup;
-    // the default for the first half of r7) over the same script and oracle — keeps the
-    // pure-Column-algebra twin oracle-gated now that the default is the imperative
-    // aggregate.
-    // count-gated (r17): prefold materializes per-key prefolded state at ~3× the
-    // native fold's shuffle footprint and was disk-killed at sf100 where the default
-    // cdc_apply_merge completed in 190 s — past the knee it raises a named error
-    // pointing at cdc_apply_merge. Gate below the re-applied final sort.
-    "cdc_apply_merge_prefold" -> { (s, dir) =>
-      import s.implicits._
-      val snapshot = Tables(s, dir, "orders")
-        .select($"o_orderkey", $"o_orderstatus", $"o_orderpriority")
-      val schema = Catalog.withKeyMetadata(snapshot.schema, Set("o_orderkey"))
-      ScaleGuard.gate(
-        EnvelopeApply.applyPrefolded(snapshot, mergeEnvelope(s, dir, lit(true)), schema),
-        s, dir, "cdc_apply_merge_prefold")
-        .orderBy($"o_orderkey")
     },
     // VERDICT r5 #3 — the reference's FULL dictionary chain in one gated query: dictionary
     // views (literal frames stand in for dba_tab_cols/constraints/cons_columns/ind_columns/
@@ -1404,7 +1381,7 @@ object CdcQueries {
         |    'NEW' AS o_orderpriority
         |  FROM base WHERE k % 7 = 0 AND k % 4 = 0)
         |SELECT * FROM surv UNION ALL SELECT * FROM ins ORDER BY o_orderkey""".stripMargin,
-    // same final state as cdc_apply_merge — the fold plan must change nothing
+    // aliases of cdc_apply_merge: the same builder, so the same final state
     "cdc_apply_merge_folded" -> applyMergeOracleSql,
     "cdc_apply_merge_prefold" -> applyMergeOracleSql,
     "cdc_apply_merge_multitable" ->

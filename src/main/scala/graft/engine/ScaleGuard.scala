@@ -4,13 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Corpus-count gates for base operators with a MEASURED scale knee (r15–r19 decade
-  * probes, BASELINE.md). Five registered queries died at sf100 in their probes —
+  * probes, BASELINE.md). Four registered queries died at sf100 in their probes —
   * `dedup_embedding_cosine` (fixed 10 planes → quadratic verify pair mass, killed at
   * its 1200 s timeout), `simsearch_stream_ivfpq` (fixed 8-cell quantizer → 75 GB of
   * per-wave ADC shuffle, killed), `dedup_image_phash33` (all-pairs output at saturated
-  * fingerprint cardinality → ~2.5·10⁹ output rows, disk-full), and the two r17
-  * CDC batch shapes `cdc_txn_reconstruct` / `cdc_apply_merge_prefold` (feed-sized
-  * xid shuffle / 3× prefolded-state materialization, both disk-watchdog-killed) —
+  * fingerprint cardinality → ~2.5·10⁹ output rows, disk-full), and the CDC batch
+  * assembly `cdc_txn_reconstruct` (feed-sized xid shuffle, disk-watchdog-killed) —
   * plus `dedup_image_phash` / `dedup_image_phash3`, which share phash33's measured
   * knee exactly (the death is the all-pairs OUTPUT shape, not the banding scheme;
   * all three emit ~85M rows at sf10 — VERDICT r17 #1) — and each has a
@@ -40,11 +39,10 @@ object ScaleGuard {
     * gate even though the r15 probe measured the death on phash33 (VERDICT r17 #1). */
   val ImageAllPairsKneeRows = 2500000L
 
-  /** Largest orders corpus for the two disk-fatal CDC batch shapes (r17 probe):
-    * sf10 (15M orders) completed both — txn_reconstruct with a 1.45 GB disk spill,
-    * prefold in 35 s; sf100 (150M orders) killed BOTH by the disk watchdog (the batch
-    * assembly shuffles the feed-sized wire history on xid, ~250 GB at sf100; prefold
-    * materializes per-key prefolded state ~3× the native fold's footprint). */
+  /** Largest orders corpus for the disk-fatal CDC batch assembly (r17 probe): sf10
+    * (15M orders) completed with a 1.45 GB disk spill; sf100 (150M orders) was killed
+    * by the disk watchdog (the batch assembly shuffles the feed-sized wire history on
+    * xid, ~250 GB at sf100). */
   val CdcBatchKneeRows = 50000000L
 
   /** Largest embeddings corpus for the two FLAT anchors (r19 probe, VERDICT r18 #2):
@@ -68,7 +66,6 @@ object ScaleGuard {
     "dedup_image_phash3" ->
       (("documents", ImageAllPairsKneeRows, "r15 probe of phash33, identical output shape")),
     "cdc_txn_reconstruct" -> (("orders", CdcBatchKneeRows, "r17 probe")),
-    "cdc_apply_merge_prefold" -> (("orders", CdcBatchKneeRows, "r17 probe")),
     "dedup_semantic" -> (("embeddings", FlatAnchorKneeRows, "r19 probe (sf1000)")),
     "simsearch_stream" -> (("embeddings", FlatAnchorKneeRows, "r19 probe (sf1000)")))
 

@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * `events.ts` is TIMESTAMP(NANOS), which Spark 4 refuses at schema inference unless
   * `spark.sql.legacy.parquet.nanosAsLong=true` (the column then reads as LongType, nanos
-  * since epoch). That conf is set ONCE at session construction by every entry point
-  * (Bench/Verify/BenchOne/Explain/SparkTestSession) — a table loader mutating shared
+  * since epoch). That conf is set ONCE at session construction by [[graft.LocalSession]],
+  * which every entry point uses — a table loader mutating shared
   * session state as a read side effect is action-at-a-distance, so it does not happen here.
   */
 object Tables {

@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Plan-evidence printer for the component-family INTERNALS (r20): the registered
@@ -12,13 +11,7 @@ import org.apache.spark.sql.functions._
 object ExplainDedupInternals {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = graft.LocalSession(threads = 4, shufflePartitions = Some(4))
     s.sparkContext.setLogLevel("ERROR")
     import s.implicits._
 

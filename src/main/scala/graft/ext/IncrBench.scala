@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Isolates the cost of the incremental connected-components maintenance fold (r11
@@ -34,13 +33,7 @@ object IncrBench {
     // the fold time falling with 1/M against a flat full_sec. Any split yields the same
     // labels (the equality gate still runs), so M is purely a measurement lens.
     val incrMod = args.drop(2).headOption.map(_.toLong).getOrElse(1L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     import spark.implicits._
 
     def timed[T](f: => T): (T, Double) = {

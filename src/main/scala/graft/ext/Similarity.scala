@@ -397,19 +397,6 @@ object Similarity {
       .select($"vec_id", unpackCell($"pack").as("cell"))
   }
 
-  /** Occupancy probe for the scaled-cell index builds (builder tooling, not a query):
-    * the √N-seed cell assignment under the flat or tiered rule, for skew inspection. */
-  private[graft] def debugScaledCellsOf(s: SparkSession, dir: String,
-      tiered: Boolean): DataFrame = {
-    import s.implicits._
-    val q = milliQ(s, dir)
-    val k = math.max(8L, math.ceil(math.sqrt(
-      graft.engine.Tables(s, dir, "embeddings").count().toDouble)).toLong)
-    val cents = q.filter($"vec_id" >= SemDedupSeedBase).orderBy($"vec_id").limit(k.toInt)
-      .select($"vec_id".as("cid"), $"qv".as("cvec"))
-    if (tiered) assignCellsTiered(q, cents, k) else assignCells(q, cents)
-  }
-
   /** The flat per-query ADC lookup map from a `(q_id, sub, sv, svv)` subspace frame —
     * ONE rendering shared by the fixed-query chains (corpus `subs` filtered to the
     * query ids) and the streaming server (the arriving batch's slices). */

@@ -1,7 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Per-micro-batch serving latency of the streaming ANN servers (r16, VERDICT r15 #5):
  * `simsearch_stream` / `simsearch_stream_ivfpq` / `simsearch_stream_append` report
@@ -26,15 +24,7 @@ object StreamLatency {
     val servers = if (args.length > 1) args.drop(1).toSeq
       else Seq("simsearch_stream", "simsearch_stream_ivfpq",
         "simsearch_stream_ivfpq_cells", "simsearch_stream_append")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     import spark.implicits._
 
     // round-robin re-split of a server's own arrival population into nWaves batches —

@@ -47,8 +47,8 @@ object TextOps {
       .select(col("doc_id"), col("_wn_s.pos").as("pos"), col("_wn_s.fp").as("fp"))
   }
 
-  /** Broadcast-side cardinality ceiling for the corpus-derived small sides below
-    * (boilerplate segment set, benchmark shingle set). ~10M short strings is well inside
+  /** Broadcast-side cardinality ceiling for corpus-derived small sides (the
+    * decontamination benchmark shingle set). ~10M short strings is well inside
     * the broadcast limit; a corpus pathological enough to exceed it must fail loudly
     * (see [[guardBroadcast]]) instead of OOMing the driver during broadcast build. */
   private[ext] val MaxBroadcastRows = 10000000L
@@ -114,26 +114,21 @@ object TextOps {
     val wlenCenter = 550L // |avg word length - 5.5 chars| in centichars, weight -1
   }
 
-  /** CORPUS-LEVEL LINE DEDUP shared builder — the CCNet/RefinedWeb boilerplate-removal
-    * step behind `text_line_dedup` (broadcast form) and `text_line_dedup_rel` (shuffled
-    * scale form). Documents segment into fixed [[LineDedupWindow]]-token windows (this
-    * corpus's "lines" — the flat synthetic text has no newlines); any segment whose
-    * exact text repeats [[LineDedupMinRepeats]]+ times ACROSS the corpus is dropped
-    * everywhere, and survivors reassemble in document order (empty docs kept, text='').
+  /** CORPUS-LEVEL LINE DEDUP — the CCNet/RefinedWeb boilerplate-removal step behind
+    * `text_line_dedup_rel`. Documents segment into fixed [[LineDedupWindow]]-token
+    * windows (this corpus's "lines" — the flat synthetic text has no newlines); any
+    * segment whose exact text repeats [[LineDedupMinRepeats]]+ times ACROSS the corpus is
+    * dropped everywhere, and survivors reassemble in document order (empty docs kept,
+    * text='').
     *
-    * The two forms differ ONLY in how the boilerplate membership test executes:
-    *  - `shuffled = false`: the high-repetition tail (tiny by construction on a natural
-    *    corpus) BROADCASTS into a left_anti join — no shuffle on the skewed segment key
-    *    at all; [[guardBroadcast]] refuses loudly past [[MaxBroadcastRows]] (the r19
-    *    sf1000 probe tripped it at 54.5M segments) and its error names the `_rel` form.
-    *  - `shuffled = true`: a sort-merge anti-join on `seg` — both sides shuffle once on
-    *    the segment key (the boiler side is already map-side-combined down to distinct
-    *    repeated segments by its aggregate; AQE handles probe-side skew), so there is
-    *    no corpus-dependent broadcast bound and the plan survives any corpus size. The
-    *    join hint pins the shuffled plan against auto-broadcast.
-    * Either way ONE map-side-combined shuffle builds the segment spectrum, and the only
-    * other exchange is the per-doc rebuild on the uniform doc_id key. */
-  private[ext] def lineDedup(s: SparkSession, dir: String, shuffled: Boolean): DataFrame = {
+    * ONE map-side-combined shuffle builds the segment spectrum. The boilerplate
+    * membership test is a sort-merge anti-join on `seg`: both sides shuffle once on the
+    * segment key (the boiler side is already combined down to distinct repeated
+    * segments by its aggregate; AQE splits skewed probe partitions), so no side is
+    * bounded by a broadcast and the plan survives any corpus size. The join hint pins
+    * the shuffled plan against small-corpus auto-broadcast. The only other exchange is
+    * the per-doc rebuild on the uniform doc_id key. */
+  private[ext] def lineDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val W = LineDedupWindow
     val toks = $"toks"
@@ -146,11 +141,7 @@ object TextOps {
       .withColumnRenamed("col", "seg")
     val boiler0 = segs.groupBy($"seg").agg(count(lit(1)).as("cnt"))
       .filter($"cnt" >= LineDedupMinRepeats).select($"seg")
-    val pruned =
-      if (shuffled) segs.join(boiler0.hint("shuffle_merge"), Seq("seg"), "left_anti")
-      else segs.join(broadcast(guardBroadcast(boiler0, "seg", MaxBroadcastRows,
-        "line-dedup boilerplate segment set (use its registered scale path " +
-          "'text_line_dedup_rel' — SparkEntry.scalePath)")), Seq("seg"), "left_anti")
+    val pruned = segs.join(boiler0.hint("shuffle_merge"), Seq("seg"), "left_anti")
     val rebuilt = pruned
       .groupBy($"doc_id").agg(
         array_join(transform(array_sort(collect_list(struct($"pos", $"seg"))),
@@ -496,30 +487,11 @@ object TextOps {
         .select($"doc_id", $"rnk", $"tok", $"tf", $"df")
         .orderBy($"doc_id", $"rnk")
     },
-    // CORPUS-LEVEL LINE DEDUP — the CCNet/RefinedWeb boilerplate-removal step: documents
-    // segment into fixed 4-token windows (this corpus's "lines"), any segment whose exact
-    // text repeats LineDedupMinRepeats+ times ACROSS the corpus is dropped everywhere,
-    // and survivors reassemble in document order (empty docs are kept, text = '').
-    // 100 TB shape: ONE map-side-combined shuffle builds the segment spectrum; the
-    // boilerplate set (the high-repetition tail — tiny by construction) BROADCASTS into a
-    // left_anti join, so the skewed segment key never drives a window or a shuffled join
-    // (a count-over-window here would shuffle every row with NO partial aggregation and
-    // hot-spot on exactly the repeated segments); the only other shuffle is the per-doc
-    // rebuild on the uniform doc_id key.
-    "text_line_dedup" -> { (s, dir) => lineDedup(s, dir, shuffled = false) },
-    // POST-TRIP SCALE PATH of text_line_dedup (r20, VERDICT r19 #1): same operator, same
-    // oracle, but the boilerplate membership test is a SHUFFLED sort-merge anti-join on
-    // the segment key instead of a driver broadcast. The broadcast form REFUSES — by
-    // design — once the boilerplate set passes guardBroadcast's 10M-row bound (the r19
-    // sf1000 probe tripped it at 54.5M segments); this form has no broadcast-side bound
-    // at all: the segment spectrum stays distributed, the anti-join shuffles both sides
-    // on `seg` (map-side-combined boiler build; AQE splits skewed probe partitions),
-    // and per-partition cost is flat in corpus size. The `hint("shuffle_merge")` PINS
-    // the shuffled plan so small-corpus auto-broadcast can't silently turn this back
-    // into the refused shape — the registered substitute must BE the scale plan it
-    // claims to be. Row-identical to the base form at every scale both can run
-    // (same DuckDB oracle; LineDedupScalePathSpec pins frame equality).
-    "text_line_dedup_rel" -> { (s, dir) => lineDedup(s, dir, shuffled = true) },
+    // CORPUS-LEVEL LINE DEDUP (boilerplate removal), see [[lineDedup]]. `text_line_dedup`
+    // named a retired broadcast-join twin and stays registered as an alias of the same
+    // builder, gated by the same oracle.
+    "text_line_dedup" -> lineDedup _,
+    "text_line_dedup_rel" -> lineDedup _,
     // TRAINING SEQUENCE PACKING — the step that turns a filtered corpus into fixed-budget
     // training sequences: docs are laid out in a deterministic order and each is assigned
     // to the pack its running token offset falls in (pack = floor(prev_cumsum / budget),
@@ -858,8 +830,7 @@ object TextOps {
       |${p}sel AS (SELECT DISTINCT doc_id, i, hv FROM ${p}sel0 WHERE rn = 1)""".stripMargin
   }
 
-  /** One oracle for BOTH line-dedup forms: `text_line_dedup_rel` is a plan-level scale
-    * substitute, not a different operator, so it must hash-match the same SQL. */
+  /** The line-dedup oracle, shared by `text_line_dedup_rel` and its alias. */
   private val lineDedupOracleSql: String =
     s"""WITH t AS (SELECT doc_id,
        |  list_filter(string_split_regex(trim(text),'\\s+'), x -> x <> '') AS w
@@ -990,7 +961,6 @@ object TextOps {
         |  cast(max(cnt) * 10000 // sum(cnt) AS BIGINT) AS rep_bp
         |FROM cnts GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     "text_line_dedup" -> lineDedupOracleSql,
-    // the shuffled scale path answers the SAME question — one oracle, two plans
     "text_line_dedup_rel" -> lineDedupOracleSql,
     "text_pack_sequences" ->
       s"""WITH t AS (SELECT doc_id, source,

@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Diagnostic main behind the r14 scale-aware winnow-rarity rule: prints the
@@ -18,13 +17,7 @@ object WinnowProbe {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val caps = if (args.length > 1) args.tail.map(_.toLong).toSeq
                else Seq(4L, 8L, 16L, 32L, 64L, 128L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.LocalSession()
     import s.implicits._
     val fps = TextOps.winnowFingerprints(s, Dedup.doubledDocs(s, dir))
       .select($"doc_id", $"fp").distinct()

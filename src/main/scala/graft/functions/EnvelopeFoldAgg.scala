@@ -37,26 +37,20 @@ object EnvelopeFoldBuffer {
  * `struct<deleted: boolean, m: map<string,string>, replaced: boolean>` — exactly the
  * `f` struct [[graft.cdc.EnvelopeApply.applyChanges]] consumes.
  *
- * Motivation (r7): [[graft.cdc.EnvelopeApply.applyFolded]] gets the ideal PLAN — one
- * shuffle, snapshot join on the aggregate's own partitioning — but its
- * `collect_list` buffer holds a key's WHOLE change history (a million-update hot key
- * OOMs) and its comparator-lambda sort + `aggregate` HOF evaluate interpreted.
- * [[graft.cdc.EnvelopeApply.applyPrefolded]] bounds state by the column count but pays
- * an extra (key, column) exchange for it. This aggregate gets BOTH: the fold's closed
- * form — last op, last INSERT/DELETE boundary B, per-column last value at-or-after B —
- * maintained imperatively in a buffer bounded by the COLUMN COUNT, with map-side
- * partial aggregation (the buffer serializes per entry, so the shuffle carries at most
- * one winner per (key, column), not the history), in ONE exchange.
+ * The fold has a closed form — last op, last INSERT/DELETE boundary B, per-column last
+ * value at-or-after B — so the aggregate keeps exactly that, imperatively, in a buffer
+ * bounded by the COLUMN COUNT rather than the key's change history (a million-update hot
+ * key stays small). The buffer serializes per entry, so map-side partial aggregation
+ * ships at most one winner per (key, column), and the apply plan needs ONE exchange.
  *
  * Order-insensitive by construction: update/merge keep maxima under the total order
- * `(commit_scn, scn, seq)`, so no sort is needed and events may arrive in any order —
- * the same reason the declarative prefold needs no window. Equivalence to both
- * declarative twins is pinned by EnvelopeApplySpec's 300-scenario property test.
+ * `(commit_scn, scn, seq)`, so no sort is needed and events may arrive in any order.
+ * EnvelopeApplySpec's 300-history property test pins it against a sequential fold model.
  *
- * Semantics mirrored from the declarative prefold (reference Utils:389-415 null rules):
- * winners come from INSERT/UPDATE payload entries only; the boundary advances on
- * INSERT/DELETE; an explicit null-valued entry IS a winner (SET col = NULL);
- * `deleted` = the key's last event was a DELETE; `replaced` = a boundary exists.
+ * Semantics (reference Utils:389-415 null rules): winners come from INSERT/UPDATE
+ * payload entries only; the boundary advances on INSERT/DELETE; an explicit null-valued
+ * entry IS a winner (SET col = NULL); `deleted` = the key's last event was a DELETE;
+ * `replaced` = a boundary exists.
  */
 case class EnvelopeFold(
     csE: Expression, scnE: Expression, seqE: Expression, opE: Expression, dataE: Expression,
@@ -95,11 +89,10 @@ case class EnvelopeFold(
     val code: Byte =
       if (opV.equals(InsU)) OpIns else if (opV.equals(UpdU)) OpUpd
       else if (opV.equals(DelU)) OpDel else 0
-    // a non-DML op (code 0) still counts as the key's LAST event — both declarative
-    // twins treat a trailing unknown op as not-a-DELETE (the fold's otherwise branch, the
-    // prefold's marker row), so `deleted` must clear here too or the three paths diverge
-    // on envelopes that carry DDL rows (the default dmlTypes admits them). It contributes
-    // no winners and no boundary.
+    // a non-DML op (code 0) still counts as the key's LAST event — a trailing unknown op
+    // is not-a-DELETE, so `deleted` must clear here too, matching the streaming apply's
+    // overlay branch on envelopes that carry DDL rows (the default dmlTypes admits them).
+    // It contributes no winners and no boundary.
     if (!b.hasLast || lt(b.lcs, b.lscn, b.lseq, cs, scn, seq)) {
       b.hasLast = true; b.lcs = cs; b.lscn = scn; b.lseq = seq; b.lastOp = code
     }

@@ -4,22 +4,5 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all specs (Spark startup dominates test wall time). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Spark 4.1's checksum checkpoint file manager deadlocks its async checksum write
-      // under local[4] test load — tasks park forever in
-      // ChecksumCheckpointFileManager.awaitResult. Plain checkpoint files are fine here.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // events.ts is TIMESTAMP(NANOS) → LongType (see engine.Tables)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = LocalSession(threads = 4, shufflePartitions = Some(4))
 }

@@ -140,23 +140,7 @@ class EnvelopeApplySpec extends AnyFunSuite {
     assert(k1.nonEmpty && k1.head.getAs[Map[String, String]]("m")("V") == "42")
   }
 
-  test("applyPrefolded pins NO cache (single-scan plan); the r6 handle stays a safe no-op") {
-    import spark.implicits._
-    val snapshot = Seq((1L, "a", 10)).toDF("id", "name", "v")
-    val schema = Catalog.withKeyMetadata(snapshot.schema, Set("id"))
-    val envDf = env(Seq(
-      (1L, 1L, 1L, RedoEvent.Update, Map("ID" -> "1", "NAME" -> "z"), Map("ID" -> "1"))))
-    spark.catalog.clearCache()
-    val (result, release) = EnvelopeApply.applyPrefoldedWithHandle(snapshot, envDf, schema)
-    assert(result.collect().toSeq == Seq(Row(1L, "z", 10)))
-    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
-    assert(cm.isEmpty, "the single-scan prefold must not pin any cache (r7: a long-lived " +
-      "multi-table applier service must not accrete pinned caches per call)")
-    release() // compat shim — must not throw
-    assert(cm.isEmpty)
-  }
-
-  test("property: applyNative ≡ applyPrefolded ≡ applyFolded on 300 random per-key histories") {
+  test("property: apply ≡ applyStreaming ≡ a fold model on 300 random histories") {
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     val cols = Seq("NAME", "V", "W") // W exercises payload columns outside the schema
@@ -166,9 +150,9 @@ class EnvelopeApplySpec extends AnyFunSuite {
         val op = rnd.nextInt(12) match {
           case 0 | 1 => RedoEvent.Delete
           case 2 | 3 => RedoEvent.Insert
-          case 4     => "DDL" // non-DML rider (default dmlTypes admits DDL): all three
-                              // paths must agree it clears `deleted` as the last event
-                              // and contributes no winners and no boundary
+          case 4     => "DDL" // non-DML rider (default dmlTypes admits DDL): every path
+                              // must agree it clears `deleted` as the last event and
+                              // contributes no winners and no boundary
           case _     => RedoEvent.Update
         }
         val data: Map[String, String] =
@@ -184,17 +168,48 @@ class EnvelopeApplySpec extends AnyFunSuite {
       }
       rnd.shuffle(evs)
     }
-    val snapshot = (1 to 150).map(k => (k.toLong, s"n$k", k * 10)).toDF("id", "name", "v")
+    val snap = (1 to 150).map(k => (k.toLong, s"n$k", k * 10))
+    val snapshot = snap.toDF("id", "name", "v")
     val schema = Catalog.withKeyMetadata(snapshot.schema, Set("id"))
-    // `apply` delegates to applyNative (r7), so each twin is pinned explicitly against
-    // the HOF fold — the original semantics reference — or the test degenerates to x ≡ x
-    val a = EnvelopeApply.applyFolded(snapshot, env(events), schema).orderBy($"id").collect().toSeq
-    val b = EnvelopeApply.applyPrefolded(snapshot, env(events), schema)
-      .orderBy($"id").collect().toSeq
-    val c = EnvelopeApply.applyNative(snapshot, env(events), schema)
-      .orderBy($"id").collect().toSeq
-    assert(a === b)
-    assert(a === c)
+
+    // the reference: a sequential fold per key (scn = k) in (commit_scn, scn, seq)
+    // order — INSERT replaces, DELETE tombstones, any other op overlays its payload by
+    // key presence — whose result then overlays the snapshot row
+    final case class Fold(deleted: Boolean, m: Map[String, String], replaced: Boolean)
+    val folds = events.groupBy(_._2).map { case (k, evs) =>
+      k -> evs.sortBy(e => (e._1, e._2, e._3)).foldLeft(Fold(false, Map.empty, false)) {
+        case (_, (_, _, _, RedoEvent.Insert, data, _)) => Fold(false, data, true)
+        case (_, (_, _, _, RedoEvent.Delete, _, _))    => Fold(true, Map.empty, true)
+        case (f, (_, _, _, _, data, _)) =>
+          Fold(false, f.m ++ Option(data).getOrElse(Map.empty), f.replaced)
+      }
+    }
+    val snapRows = snap.map { case (id, n, v) => id -> Row(id, n, v) }.toMap
+    def column(f: Fold, base: Option[Row], c: String, i: Int, typed: String => Any): Any =
+      if (f.m.contains(c)) Option(f.m(c)).map(typed).orNull
+      else if (f.replaced) null
+      else base.map(_.get(i)).orNull
+    val model = (snapRows.keySet ++ folds.keySet).toSeq.sorted.flatMap { id =>
+      folds.get(id) match {
+        case None                 => snapRows.get(id)
+        case Some(f) if f.deleted => None
+        case Some(f) => Some(Row(id, column(f, snapRows.get(id), "NAME", 1, identity),
+          column(f, snapRows.get(id), "V", 2, _.toInt)))
+      }
+    }
+
+    val batch = EnvelopeApply(snapshot, env(events), schema).orderBy($"id").collect().toSeq
+    // the same histories as ONE micro-batch through the streaming applier, replayed onto
+    // the snapshot by the shared MERGE stage
+    val emitted = graft.engine.StreamGate.runBatches(spark,
+        org.apache.spark.sql.Encoders.product[EnvRow], "env_apply_property_sink",
+        Seq(events.map((EnvRow.apply _).tupled))) { ds =>
+      EnvelopeApply.applyStreaming(ds.toDF(), schema).toDF()
+    }
+    val streamed = EnvelopeApply.applyChanges(snapshot,
+      EnvelopeApply.latestChanges(emitted, schema), schema).orderBy($"id").collect().toSeq
+    assert(batch === model)
+    assert(streamed === model)
   }
 
   test("apply requires pk/uq key metadata on the schema") {

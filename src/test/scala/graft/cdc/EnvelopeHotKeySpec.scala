@@ -3,16 +3,16 @@ package graft.cdc
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The hot-key posture claim behind the r7 default flip: a key with a multi-million
-  * update history must flow through the envelope apply with per-key aggregation state
-  * bounded by the COLUMN COUNT — the HOF fold's collect_list would buffer the whole
-  * history for that key (the structural OOM at 100 TB; not executed here), while the
-  * native [[graft.functions.EnvelopeFold]] keeps (last-op, boundary, one winner per
-  * column) no matter the history length. 2M single-key events is far past any plausible
-  * collect_list comfort zone for a 1-column buffer ratio, and completes quickly. */
+/** The hot-key posture claim of the batch apply: a key with a multi-million update
+  * history must flow through the envelope apply with per-key aggregation state bounded
+  * by the COLUMN COUNT — a collect_list of the history would buffer all of it for that
+  * key (the structural OOM at 100 TB), while the native [[graft.functions.EnvelopeFold]]
+  * keeps (last-op, boundary, one winner per column) no matter the history length. 2M
+  * single-key events is far past any plausible collect_list comfort zone, and completes
+  * quickly. */
 class EnvelopeHotKeySpec extends AnyFunSuite {
 
-  test("applyNative folds a 2M-update hot key with column-bounded state") {
+  test("apply folds a 2M-update hot key with column-bounded state") {
     val spark = graft.SparkTestSession.spark
     import spark.implicits._
     val n = 2000000L
@@ -26,7 +26,7 @@ class EnvelopeHotKeySpec extends AnyFunSuite {
       .withColumn("before", lit(null).cast("map<string,string>")) // DELETE-side key slot
     val snapshot = Seq((7L, "a", "b", "c")).toDF("id", "c0", "c1", "c2")
     val schema = Catalog.withKeyMetadata(snapshot.schema, Set("id"))
-    val out = EnvelopeApply.applyNative(snapshot, envelope, schema).collect()
+    val out = EnvelopeApply(snapshot, envelope, schema).collect()
     assert(out.length == 1)
     val r = out.head
     assert(r.getLong(0) == 7L)

@@ -59,19 +59,6 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(exchanges <= 2, s"expected <=2 exchanges (user_id hash + final sort):\n$p")
   }
 
-  test("cdc_apply_merge_folded: the MERGE join reuses the fold's key partitioning (no re-shuffle)") {
-    val p = plan("cdc_apply_merge_folded")
-    // exchanges: events-side shuffle into the fold aggregate, snapshot-side shuffle into
-    // the join, final ORDER BY range exchange — the changes side of the full-outer join
-    // must NOT add a fourth (the aggregate's hashpartitioning on the pk is the join's).
-    // Tables.par's scan-parallelism floor (RoundRobinPartitioning; a no-op at cluster
-    // scale where the input plans >= cores splits) is not a key shuffle — excluded.
-    val exchanges = p.linesIterator.count(l => l.contains("Exchange") &&
-      !l.contains("Reused") && !l.contains("RoundRobinPartitioning"))
-    assert(exchanges <= 3, s"expected <=3 exchanges (agg partitioning reused by join):\n$p")
-    assert(p.contains("FullOuter"), s"expected a full-outer MERGE join:\n$p")
-  }
-
   test("dedup_ngram_jaccard: df annotation broadcasts; both self-join sides read the cached prefix") {
     val p = plan("dedup_ngram_jaccard")
     // the df annotation join must be broadcast (a shuffle join would repartition every
@@ -105,8 +92,7 @@ class PlanAuditSpec extends AnyFunSuite {
   test("cdc_apply_merge (default = native envelope_fold): one agg exchange, partial agg, no history sort") {
     val p = plan("cdc_apply_merge")
     // the bounded-buffer claim: no sorted whole-history array aggregate anywhere in the
-    // plan (that is applyFolded's shape) — the imperative fold keeps order-insensitive
-    // maxima instead
+    // plan — the imperative fold keeps order-insensitive maxima instead
     assert(!p.contains("array_sort"), s"native fold must not materialize sorted histories:\n$p")
     assert(!p.contains("collect_list"), s"native fold must not collect histories:\n$p")
     // the custom aggregate runs as ObjectHashAggregate with a MAP-SIDE partial pass:
@@ -121,6 +107,15 @@ class PlanAuditSpec extends AnyFunSuite {
     val aggSide = p.linesIterator.filter(_.contains("hashpartitioning")).size
     assert(aggSide <= 2, // agg input + snapshot side; the fold output must NOT re-exchange
       s"expected at most 2 hash exchanges (agg input, snapshot side):\n$p")
+    // exchanges overall: events-side shuffle into the fold aggregate, snapshot-side
+    // shuffle into the join, final ORDER BY range exchange — the changes side of the
+    // full-outer join must NOT add a fourth. Tables.par's scan-parallelism floor
+    // (RoundRobinPartitioning; a no-op at cluster scale where the input plans >= cores
+    // splits) is not a key shuffle — excluded.
+    val exchanges = p.linesIterator.count(l => l.contains("Exchange") &&
+      !l.contains("Reused") && !l.contains("RoundRobinPartitioning"))
+    assert(exchanges <= 3, s"expected <=3 exchanges (agg partitioning reused by join):\n$p")
+    assert(p.contains("FullOuter"), s"expected a full-outer MERGE join:\n$p")
   }
 
   test("dedup_semantic: within-cell pairs are an equi-join on the cell key, never cartesian") {
@@ -204,24 +199,6 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(docScan.contains("n_chars") && docScan.contains("lang"),
       s"expected lang/n_chars pushed to the documents scan: $docScan\n$p")
     assert(!docScan.contains("text"), s"documents scan must not read text: $docScan")
-  }
-
-  test("text_line_dedup: boilerplate set broadcasts into the anti-join, no shuffled join/window on seg") {
-    val p = plan("text_line_dedup")
-    // the segment key is skewed BY DEFINITION (boilerplate = repeated segments): the
-    // anti-join must consume a BroadcastExchange of the tiny boilerplate set, and no
-    // count-over-window (zero partial aggregation, hot-spots on the repeated segments)
-    // or sort-merge join may appear on the seg key
-    assert(p.contains("BroadcastHashJoin LeftAnti") || p.contains("BroadcastNestedLoopJoin LeftAnti") ||
-      (p.contains("LeftAnti") && p.contains("BroadcastExchange")),
-      s"expected broadcast left_anti of the boilerplate set:\n$p")
-    // the only window allowed is the broadcast-cardinality guard's global count over the
-    // ALREADY-AGGREGATED boiler set (its `_bg_n` column marks it) — a count-over-window
-    // on the raw segment spectrum would still fail here
-    val winLines = p.linesIterator.filter(_.contains("Window")).toSeq
-    assert(winLines.forall(_.contains("_bg_n")),
-      s"seg spectrum must be a partial-agg groupBy, not a window:\n$p")
-    assert(!p.contains("SortMergeJoin LeftAnti"), s"anti-join must not shuffle the seg key:\n$p")
   }
 
   test("q_bucketed_join: bucketed scans feed the SMJ with NO exchange before the join") {
@@ -453,7 +430,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // stray repartition()/rebalance would otherwise slip past those audits unnoticed.
     // Each of these queries loads exactly ONE floored table, so >1 round-robin
     // exchange means an unintended extra pass, not the floor.
-    Seq("cdc_apply_merge_folded", "corpus_funnel", "text_chunk_windows",
+    Seq("cdc_apply_merge", "corpus_funnel", "text_chunk_windows",
         "text_winnow_fingerprint").foreach { q =>
       val p = plan(q)
       val rr = p.linesIterator.count(l => l.contains("Exchange") &&

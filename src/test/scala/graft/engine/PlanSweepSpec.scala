@@ -56,7 +56,6 @@ class PlanSweepSpec extends AnyFunSuite {
     "dedup_image_phash"       -> "1-row corpus-count scale gate broadcast (engine/ScaleGuard.gateAt)",
     "dedup_image_phash3"      -> "1-row corpus-count scale gate broadcast (engine/ScaleGuard.gateAt)",
     "cdc_txn_reconstruct"     -> "1-row corpus-count scale gate broadcast (engine/ScaleGuard.gateAt)",
-    "cdc_apply_merge_prefold" -> "1-row corpus-count scale gate broadcast (engine/ScaleGuard.gateAt)",
   )
 
   test("no query plan contains CartesianProduct; BNLJ only where allowlisted") {

@@ -3,64 +3,20 @@ package graft.ext
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
- * Pins `text_line_dedup_rel` as a VALID scale substitute for `text_line_dedup`
- * (r20, VERDICT r19 #1 — the one gated/refusing operator without a registered
- * post-trip path):
- *
- *  1. ROW EQUALITY at bench scale — the two forms differ only in how the boilerplate
- *     membership test executes (broadcast vs shuffled anti-join), so every output row
- *     must be identical wherever both can run. The r19 sf1000 probe proved the
- *     broadcast form refuses at 54.5M segments; this pin is what makes the _rel form
- *     the same OPERATOR past that point rather than a fork.
- *  2. PLAN SHAPE — the _rel form's anti-join must actually BE shuffled (SortMergeJoin,
- *     pinned by its hint) and the base form's must actually broadcast: a substitute
- *     that silently auto-broadcasts at test scale would "pass" every small-corpus
- *     check and then die exactly like the base form at 50M docs.
- *  3. REGISTRY — the scalePath entry resolves, and the broadcast form's guard message
- *     names the substitute so a user who trips it is pointed at the registered path.
+ * Pins the plan of corpus-level line dedup (`text_line_dedup_rel`): the boilerplate
+ * anti-join must actually BE shuffled (SortMergeJoin, pinned by its hint). A plan that
+ * silently auto-broadcasts at test scale would pass every small-corpus check and then
+ * refuse or OOM once the boilerplate set outgrows the broadcast bound.
  */
 class LineDedupScalePathSpec extends AnyFunSuite {
 
   private def spark = graft.SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  test("shuffled line dedup is row-identical to the broadcast form at bench scale") {
-    val s = spark
-    val base = TextOps.queries("text_line_dedup")(s, dir).collect().map(_.toSeq).toSeq
-    val rel = TextOps.queries("text_line_dedup_rel")(s, dir).collect().map(_.toSeq).toSeq
-    assert(rel === base,
-      "the scale path answers the same question through a different join strategy — " +
-        "any row difference would make it a fork, not a substitute")
-  }
-
-  test("the _rel plan shuffles the anti-join; the base plan broadcasts it") {
-    val s = spark
-    def plan(q: String): String =
-      TextOps.queries(q)(s, dir).queryExecution.executedPlan.toString
-    val rel = plan("text_line_dedup_rel")
+  test("the _rel plan is a shuffled sort-merge anti-join") {
+    val rel = TextOps.queries("text_line_dedup_rel")(spark, dir)
+      .queryExecution.executedPlan.toString
     assert(rel.contains("SortMergeJoin") && rel.contains("LeftAnti"),
       s"the hint must pin a shuffled sort-merge anti-join, got:\n$rel")
-    val base = plan("text_line_dedup")
-    assert(base.contains("BroadcastHashJoin") && base.contains("LeftAnti"),
-      s"the base form must broadcast the boilerplate set, got:\n$base")
-  }
-
-  test("scalePath registry names the substitute and the guard message points at it") {
-    assert(graft.SparkEntry.scalePath.get("text_line_dedup") ===
-      Some("text_line_dedup_rel"))
-    // the broadcast form's guardBroadcast `what` string carries the pointer: trip the
-    // guard with a zero threshold and check the error names the registered path
-    val s = spark
-    import org.apache.spark.sql.functions._
-    val tiny = s.range(3).toDF("seg")
-    val e = intercept[Exception] {
-      TextOps.guardBroadcast(tiny, "seg", 0L,
-        "line-dedup boilerplate segment set (use its registered scale path " +
-          "'text_line_dedup_rel' — SparkEntry.scalePath)").collect()
-    }
-    val msg = Option(e.getMessage).getOrElse("") +
-      Option(e.getCause).map(_.getMessage).getOrElse("")
-    assert(msg.contains("text_line_dedup_rel"),
-      s"the refusal must point a tripped user at the registered substitute, got: $msg")
   }
 }

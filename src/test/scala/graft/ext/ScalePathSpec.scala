@@ -67,7 +67,7 @@ class ScalePathSpec extends AnyFunSuite {
     assert(graft.engine.ScaleGuard.gates.keySet ===
       Set("dedup_embedding_cosine", "simsearch_stream_ivfpq", "dedup_image_phash33",
         "dedup_image_phash", "dedup_image_phash3",
-        "cdc_txn_reconstruct", "cdc_apply_merge_prefold",
+        "cdc_txn_reconstruct",
         "dedup_semantic", "simsearch_stream"))
     graft.engine.ScaleGuard.gates.keySet.foreach { op =>
       assert(graft.SparkEntry.scalePath.contains(op),

@@ -18,6 +18,7 @@
 # Usage: tools/bench_closing.sh <prior-commit-ish> [sfDir] [passes]
 set -euo pipefail
 cd "$(dirname "$0")/.."
+source tools/heap.sh
 COMMIT="${1:?usage: tools/bench_closing.sh <prior-commit-ish> [sfDir] [passes]}"
 SFDIR="${2:-/root/testdata/sf0.1}"
 PASSES="${3:-3}"
@@ -31,7 +32,7 @@ git archive "$COMMIT" | tar -x -C "$SRC"
 (cd "$SRC" && sbt -batch compile >/dev/null 2>&1) || {
   echo "[closing] control snapshot compile FAILED" >&2; exit 1; }
 
-JVMFLAGS=(-Xmx24g
+JVMFLAGS=("$(default_xmx)"
   --add-opens=java.base/java.lang=ALL-UNNAMED
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED

@@ -11,6 +11,8 @@
 # injected into the highest-numbered one present).
 set -euo pipefail
 cd "$(dirname "$0")/.."
+source tools/heap.sh
+XMX=$(default_xmx)
 COMMIT="${1:?usage: tools/bench_control.sh <prior-commit-ish> [sfDir]}"
 SFDIR="${2:-/root/testdata/sf0.1}"
 SHA=$(git rev-parse --short "$COMMIT")
@@ -24,7 +26,7 @@ git archive "$COMMIT" | tar -x -C "$SRC"
 
 echo "[control] benching snapshot $SHA on $SFDIR" >&2
 (cd "$SRC" && SPARK_GRAFT_SF_DIR="$SFDIR" \
-  java -cp "target/scala-2.13/classes:/opt/spark/jars/*" -Xmx24g \
+  java -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$XMX" \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \

@@ -3,13 +3,14 @@
 # GenScale runs can't collide with a concurrent sbt test invocation).
 # Usage: tools/run.sh [-Xmx…|-D…]... <mainClass> [args...]
 cd "$(dirname "$0")/.." || exit 1
+source tools/heap.sh
 JVM_ARGS=()
 while [[ "$1" == -X* || "$1" == -D* ]]; do JVM_ARGS+=("$1"); shift; done
-# Default heap: only when the caller didn't pass an -Xmx of their own, so that
-# `tools/run.sh -Dfoo=bar Main` still runs at the documented 24g bench posture.
+# Default heap (tools/heap.sh): only when the caller didn't pass an -Xmx of their own,
+# so `tools/run.sh -Xmx2400m Main` keeps its explicit heap.
 have_xmx=0
 for a in "${JVM_ARGS[@]}"; do [[ "$a" == -Xmx* ]] && have_xmx=1; done
-[[ $have_xmx -eq 0 ]] && JVM_ARGS+=("-Xmx24g")
+[[ $have_xmx -eq 0 ]] && JVM_ARGS+=("$(default_xmx)")
 exec java -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   "${JVM_ARGS[@]}" \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
