@@ -4,9 +4,11 @@ import org.apache.spark.sql.functions.col
 
 import scala.util.control.NonFatal
 
-/** Benchmark main: runs every registered query against SPARK_GRAFT_SF_DIR and prints one
-  * JSON line. A query that throws is recorded as an `"errors"` entry (and excluded from the
-  * total) rather than silently timed — BENCH output distinguishes fast from crashed.
+/** Benchmark main: runs the registered queries against SPARK_GRAFT_SF_DIR and prints one
+  * JSON line. With no arguments every registered query runs; positional arguments name
+  * the queries to run instead (`graft.Bench q1_pricing cdc_apply_merge`). A query that
+  * throws is recorded as an `"errors"` entry (and excluded from the total) rather than
+  * silently timed — BENCH output distinguishes fast from crashed.
   *
   * MEASUREMENT VALIDITY (r6, after BENCH_r05 recorded 10-50× inflation on untouched code
   * from machine contention during the run):
@@ -14,7 +16,7 @@ import scala.util.control.NonFatal
   *     recorded — one noisy-neighbor spike on a single rep no longer poisons the number;
   *     reps are interleaved round-robin across queries so a query's K samples are spread
   *     over the whole run instead of sharing one contention window; per-query min/max
-  *     land in the full-precision file (target/bench_full.json);
+  *     and spill totals land in the full-precision file (target/bench_full.json);
   *   - a fixed CANARY query (orders scan + groupBy count) is re-timed at start, middle and
   *     end of the run; if its timings drift by more than 2× the whole run is stamped
   *     `"degraded":true` — a consumer must treat such a file as environment-corrupted
@@ -29,7 +31,7 @@ object Bench {
   /** True median: odd count → middle; even count → mean of the two middles.
     * `sorted(size/2)` alone picks the UPPER middle, which for reps=2 is the MAX — one
     * contention spike would then poison the recorded number, the exact failure the
-    * median-of-K mechanism exists to prevent. Shared with [[BenchOne]]. */
+    * median-of-K mechanism exists to prevent. */
   private[graft] def median(ts: Seq[Double]): Double = {
     val s = ts.sorted
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
@@ -72,12 +74,28 @@ object Bench {
     burning.flatMap(ph => if (!ph.isAlive || ph.destroyForcibly()) Some(ph.pid) else None)
   }
 
+  /** The queries one run times: every registered name, sorted, when `args` is empty;
+    * otherwise exactly the named ones, in the order given. The names come from the
+    * command line, so an unknown one fails here — before any session starts — with a
+    * message that names it. */
+  private[graft] def selectQueries(args: Seq[String]): Seq[String] =
+    if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted
+    else {
+      val unknown = args.filterNot(SparkEntry.queries.contains).distinct
+      require(unknown.isEmpty, s"unknown quer${if (unknown.size == 1) "y" else "ies"}: " +
+        unknown.mkString(", "))
+      args.distinct
+    }
+
+  /** Iterations of [[calibrationSpin]] per probe (~200 ms on an idle host). */
+  private val SpinIters = 100000000L
+
   /** JIT sink for [[calibrationSpin]] — a result the optimizer can't prove dead. */
   @volatile private var spinSink: Long = 0L
 
-  /** Fixed-work, single-thread CPU spin (~200 ms on an idle host at the default iteration
-    * count): pure register arithmetic, no allocation, no I/O. Because the WORK is fixed,
-    * its wall time is a direct probe of how much CPU this thread is actually getting —
+  /** Fixed-work, single-thread CPU spin (~200 ms on an idle host at [[SpinIters]]):
+    * pure register arithmetic, no allocation, no I/O. Because the WORK is fixed, its
+    * wall time is a direct probe of how much CPU this thread is actually getting —
     * a uniform 3-4× host-co-tenancy slowdown (the r8 failure mode that load_avg, the
     * 3-point canary, and steal_pct all missed) shows up as a 3-4× spin time. One spin runs
     * immediately before EVERY query rep, so each rep carries a contemporaneous probe. */
@@ -98,6 +116,7 @@ object Bench {
     spins.size >= 2 && spins.max > spins.min * 2 && spins.max - spins.min > 0.2
 
   def main(args: Array[String]): Unit = {
+    val names = selectQueries(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = LocalSession.cpus
     // stale-JVM sweep BEFORE our own session spins up: frees their cores and memory for
@@ -106,6 +125,26 @@ object Bench {
     if (killedJvms.nonEmpty)
       System.err.println(s"[bench] killed stale build JVMs: ${killedJvms.mkString(", ")}")
     val spark = LocalSession(cpus)
+    // spill accounting: executor spill bytes per query, summed over its reps — evidence
+    // that a query completes BY spilling under memory pressure, not just its wall time.
+    // runOnce tags each rep's jobs with the query name as job group; the listener maps
+    // stages to that group at submission and adds their spill at completion. It runs on
+    // the listener bus, and the totals are read only after the last rep.
+    val spillByQuery = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]
+    val stageGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => stageGroup.put(e.stageInfo.stageId, g))
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        Option(stageGroup.remove(e.stageInfo.stageId)).foreach { g =>
+          val m = e.stageInfo.taskMetrics
+          spillByQuery.merge(g, (m.memoryBytesSpilled, m.diskBytesSpilled),
+            (a, b) => (a._1 + b._1, a._2 + b._2))
+        }
+    })
     // f"" uses the JVM default locale — a de_DE machine would print decimal COMMAS and
     // corrupt the JSON; all numeric formatting here goes through Locale.ROOT
     def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
@@ -170,8 +209,7 @@ object Bench {
     canaries += canary()
     // per-rep CPU probe (r8 verdict #1): fixed-work spin before every query rep; the
     // series is the direct detector for sustained uniform host slowdown
-    val spinIters = sys.env.getOrElse("SPARK_GRAFT_SPIN_ITERS", "100000000").toLong
-    calibrationSpin(spinIters) // throwaway: absorbs the spin loop's own JIT compile
+    calibrationSpin(SpinIters) // throwaway: absorbs the spin loop's own JIT compile
     val spins = scala.collection.mutable.ArrayBuffer.empty[Double]
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double] // median
     val spreads = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)] // (min, max)
@@ -181,7 +219,6 @@ object Bench {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val perQueryTimeout = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "300").toLong
-    val names = SparkEntry.queries.keys.toSeq.sorted
     // reps are interleaved ROUND-ROBIN (rep 1 of every query, then rep 2, ...), not run
     // back-to-back per query: BENCH_r06 recorded 13.89 s for a 2.6 s query because all 3
     // of its reps landed inside one transient contention window — with ~100 queries
@@ -226,15 +263,14 @@ object Bench {
         // here, holding nothing across reps or queries. Do not introduce a cross-rep
         // or cross-query cached artifact into this loop without scoping the sweep to
         // the finished query's own RDDs first.
-        if (!sys.env.contains("SPARK_GRAFT_NO_RDD_SWEEP"))
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       }
     }
     var rep = 0
     while (rep < reps) {
       names.foreach { name =>
         if (!errors.contains(name)) {
-          spins += calibrationSpin(spinIters)
+          spins += calibrationSpin(SpinIters)
           runOnce(name)
         }
       }
@@ -287,10 +323,15 @@ object Bench {
     val total = timings.values.sum
     val canaryJson = canaries.map(num).mkString("[", ",", "]")
     val loadJson = s"[${num(loadStart)},${num(loadAvg())}]"
-    // full-precision record to stderr (and a file beside the build) for local analysis
+    // full-precision record to stderr (and a file beside the build) for local analysis.
+    // Listener events are asynchronous and the bus drain API is private to Spark; the
+    // stage-completed events of a finished job post within milliseconds, so one short
+    // settle before reading the spill totals is enough.
+    Thread.sleep(1000)
     val fullQs = timings.map { case (k, v) =>
       val (lo, hi) = spreads(k)
-      s""""${esc(k)}":{"med":$v,"min":$lo,"max":$hi}"""
+      val (spillMem, spillDisk) = Option(spillByQuery.get(k)).getOrElse((0L, 0L))
+      s""""${esc(k)}":{"med":$v,"min":$lo,"max":$hi,"spill_mem_bytes":$spillMem,"spill_disk_bytes":$spillDisk}"""
     }.mkString("{", ",", "}")
     val spinJson =
       if (spins.isEmpty) """{"n":0}"""
@@ -301,23 +342,6 @@ object Bench {
     try java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_full.json"),
       fullLine.getBytes("UTF-8"))
     catch { case NonFatal(_) => () }
-    // round-stamped snapshot (r8 verdict #1c): target/bench_full.json is overwritten by
-    // every local run, so the per-round min/med/max history only survives if each round's
-    // full-precision record lands in a BENCH_full_rN.json beside the driver's BENCH_rN.
-    // N = (highest committed BENCH_rNN) + 1 — the round currently being measured.
-    try {
-      val rx = """BENCH_r(\d+)\.json""".r
-      val here = java.nio.file.Paths.get(".")
-      val prev = java.nio.file.Files.list(here).iterator()
-      val nums = scala.collection.mutable.ArrayBuffer.empty[Int]
-      while (prev.hasNext) prev.next().getFileName.toString match {
-        case rx(n) => nums += n.toInt
-        case _ => ()
-      }
-      val round = (if (nums.isEmpty) 0 else nums.max) + 1
-      java.nio.file.Files.write(
-        here.resolve(f"BENCH_full_r$round%02d.json"), fullLine.getBytes("UTF-8"))
-    } catch { case NonFatal(_) => () }
     // stdout line: the harness that collects this keeps only a ~2000-char tail of stdout,
     // and the full-precision line has outgrown it every round (BENCH_r1..r4 all record
     // parsed:null with the line's head clipped). Emit a COMPACT line — 2-decimal medians,

@@ -79,8 +79,8 @@ object SparkEntry {
     "dedup_image_phash" -> "dedup_image_phash_stars",
     "dedup_image_phash3" -> "dedup_image_phash_stars",
     // r17 sf100 probe, measured-fatal (disk watchdog kill), count-gated: the batch
-    // assembly's feed-sized xid shuffle → the streaming assembler (whose file-fed
-    // full-chain form is graft.CdcThroughput):
+    // assembly's feed-sized xid shuffle → the streaming assembler (whose wire-to-replica
+    // chain the perfbench cdc_drain workload drives):
     "cdc_txn_reconstruct" -> "cdc_txn_reconstruct_stream",
     // r17 in-place fix shipped for events_range_join (prefix-sum form, value-identical,
     // 1500 s timeout → 14.6 s at sf100), so it needs no scale-path entry; the

@@ -387,12 +387,11 @@ object StreamScale {
         s"unknown workload(s) ${unknown.mkString(",")}; known: ${allWorkloads.mkString(",")}")
     }
     def want(w: String): Boolean = only.forall(_.contains(w))
-    // State-store posture knob (r19, VERDICT r18 #6 — extending the CdcThroughput r18
-    // RocksDB row to the replica/apply and SCD2 stateful workloads): rocksdb switches
-    // every workload's state to Spark's RocksDB provider (state ≫ heap); the reported
-    // state_mem_peak_mb is then the JVM-side usage the provider reports, beside the
-    // in-heap rows of the r8/r9 tables. Validated loudly (ADVICE r18): a typo must
-    // not masquerade as a posture measurement.
+    // State-store posture knob (SPARK_GRAFT_STATESTORE, read by LocalSession): rocksdb
+    // switches every workload's state to Spark's RocksDB provider (state ≫ heap); the
+    // reported state_mem_peak_mb is then the JVM-side usage the provider reports, beside
+    // the in-heap rows of the default store. Validated loudly: a typo must not
+    // masquerade as a posture measurement.
     val stateStore = LocalSession.stateStore
     val spark = LocalSession()
 

@@ -128,23 +128,10 @@ object CdcQueries {
   }
 
   /** Committed envelopes -> final per-key state -> count by final status (shared reducer
-    * of the batch and streaming reconstruct queries). */
+    * of the batch and streaming reconstruct queries). Unsorted: each caller sorts on top,
+    * and the gated batch form sorts ABOVE its scale gate (a join above a Sort un-sorts
+    * the output). */
   private def reconstructStatus(committed: DataFrame): DataFrame = {
-    val s = committed.sparkSession
-    import s.implicits._
-    committed
-      .select($"scn", ParseRedo.parse($"sqlRedo").as("p"))
-      .select($"scn",
-        col("p.data").getItem("O_ORDERKEY").cast("long").as("k"),
-        col("p.data").getItem("O_ORDERSTATUS").as("st"))
-      .groupBy($"k").agg(max_by($"st", $"scn").as("status"))
-      .groupBy($"status").agg(count(lit(1)).as("cnt"))
-      .orderBy($"status")
-  }
-
-  /** [[reconstructStatus]] without the final sort — the gated batch form re-sorts
-    * ABOVE its scale gate (a join above a Sort un-sorts the output). */
-  private def reconstructStatusUnsorted(committed: DataFrame): DataFrame = {
     val s = committed.sparkSession
     import s.implicits._
     committed
@@ -223,8 +210,8 @@ object CdcQueries {
     // count-gated (r17): the batch assembly shuffles the feed-sized wire history on
     // xid — ~250 GB at sf100 — and was killed by the disk watchdog (>50 GB written in
     // 70 s); past the knee the query raises a named error pointing at the STREAMING
-    // assembler (cdc_txn_reconstruct_stream's operator; the file-fed full-chain form
-    // is graft.CdcThroughput, 183k events/s sustained at the same corpus a decade up).
+    // assembler (cdc_txn_reconstruct_stream's operator, which the perfbench cdc_drain
+    // workload drives wire-to-replica).
     // Gate below the final 1-row-per-status sort (a join above a Sort un-sorts).
     "cdc_txn_reconstruct" -> { (s, dir) =>
       import s.implicits._
@@ -232,7 +219,7 @@ object CdcQueries {
         .as[(Long, String)]
         .flatMap { case (k, st) => txnEvents(k, st) }
       ScaleGuard.gate(
-        reconstructStatusUnsorted(TxnAssembler.assembleBatch(events).toDF()),
+        reconstructStatus(TxnAssembler.assembleBatch(events).toDF()),
         s, dir, "cdc_txn_reconstruct")
         .orderBy($"status")
     },
@@ -257,7 +244,7 @@ object CdcQueries {
           "cdc_txn_stream_sink", opening.toSeq, closing.toSeq) { ds =>
         TxnAssembler.assembleStreaming(ds, abandonedTxnTimeout = None).toDF()
       }
-      reconstructStatus(out)
+      reconstructStatus(out).orderBy($"status")
     },
     // VERDICT r5 #5 — the bounded-buffer OVERFLOW drop path, oracle-gated (the deliberate
     // deviation from the reference's unbounded trnCollection, SURVEY §7 hard-part 2): one
@@ -822,8 +809,7 @@ object CdcQueries {
     // hands over), re-read, and folded via scd2IncrementalFold: broadcast key
     // anti/semi-joins split the frame, and ONLY the affected cohort re-windows.
     // Equality with the full rebuild is the operator's definition, so the gate is
-    // cdc_scd2_history's oracle VERBATIM. graft.engine.Scd2IncrBench isolates the
-    // fold's cost from the in-query prior build.
+    // cdc_scd2_history's oracle VERBATIM.
     //
     // PRIOR-FRAME REUSE (r17): the r11–r16 form REBUILT and re-wrote the prior frame
     // inside every run, which the sf100 probe measured as the dominant term — 324 s
@@ -1049,7 +1035,9 @@ object CdcQueries {
   /** Delta membership for `cdc_scd2_incremental`: the late ops (scn offset >= 3) of the
     * %13 key cohort — a per-key SUFFIX of the op sequence, the in-order daily-delta
     * contract (an op landing BEHIND an already-closed interval is restatement —
-    * `cdc_scd2_restate`'s correction path — not maintenance). */
+    * `cdc_scd2_restate`'s correction path — not maintenance). The query filters with
+    * the equivalent pre-parse [[scd2DeltaScnCond]]; Scd2DeltaCondSpec pins the two
+    * against each other. */
   private[engine] def scd2DeltaCond: Column =
     col("operation") =!= "BASE" && col("o_orderkey") % 13 === 0 && col("scn") % 10 >= 3
 
@@ -1077,7 +1065,7 @@ object CdcQueries {
 
   /** Where the incremental-SCD2 query persists (and re-reads) the prior version frame —
     * in production, yesterday's history table; the parquet round-trip makes the fold
-    * start from a real persisted artifact, which is also what Scd2IncrBench times. */
+    * start from a real persisted artifact. */
   private[engine] def scd2PriorPath(dir: String): String =
     new java.io.File("target/graft_scd2_prior/" +
       dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
@@ -1094,38 +1082,15 @@ object CdcQueries {
     * `cdc_scd2_history`'s oracle verbatim. */
   private[engine] def scd2IncrementalFold(prior: DataFrame, delta: DataFrame,
       cols: Seq[(String, String)] = Scd2Cols): DataFrame = {
-    val affected = delta.select(col("o_orderkey")).distinct()
-    val untouched = prior.join(broadcast(affected), Seq("o_orderkey"), "left_anti")
-    untouched.unionByName(
-      scd2CohortRebuild(prior, delta, cols).select(untouched.columns.map(col).toSeq: _*))
-  }
-
-  /** The fold's REWRITE branch alone — the rows a merge-on-read history table would
-    * physically write for the day's delta (untouched keys stay as-is on disk; the
-    * logical pass-through union above exists for the whole-table equality gate).
-    * [[Scd2IncrBench]] times this separately: it is the production write cost. */
-  private[engine] def scd2CohortRebuild(prior: DataFrame, delta: DataFrame,
-      cols: Seq[(String, String)] = Scd2Cols): DataFrame = {
     val inCols = Seq("o_orderkey", "scn", "operation", "data").map(col)
-    val affected = delta.select(col("o_orderkey")).distinct()
-    Scd2.versionFrame(
-      prior.join(broadcast(affected), Seq("o_orderkey"), "left_semi").select(inCols: _*)
+    val affected = broadcast(delta.select(col("o_orderkey")).distinct())
+    val untouched = prior.join(affected, Seq("o_orderkey"), "left_anti")
+    val cohort = Scd2.versionFrame(
+      prior.join(affected, Seq("o_orderkey"), "left_semi").select(inCols: _*)
         .unionByName(delta.select(inCols: _*)),
       "o_orderkey", cols)
+    untouched.unionByName(cohort.select(untouched.columns.map(col).toSeq: _*))
   }
-
-  /** [[Scd2IncrBench]]'s inputs: the prior version frame (pre-persist) and the delta
-    * op slice, split by the same scd2DeltaCond the registered query uses. */
-  private[engine] def scd2IncrBenchInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val in = scd2Input(s, dir)
-    (Scd2.versionFrame(in.filter(!scd2DeltaCond), "o_orderkey", Scd2Cols),
-      in.filter(scd2DeltaCond))
-  }
-
-  /** The full whole-table version frame, for [[Scd2IncrBench]]'s displaced-cost timing
-    * and equality gate. */
-  private[engine] def scd2FullVersions(s: SparkSession, dir: String): DataFrame =
-    scd2Versions(s, dir)
 
   /** The shared history projection of `cdc_scd2_history`/`_incremental`: delete markers
     * close intervals then vanish; surviving versions get per-key ordinals. */

@@ -53,8 +53,8 @@ object Dedup {
     * `dedup_winnow_pairs_rel` a fingerprint is rare when its document frequency is at
     * most `max(WinnowMaxDf, ceil(N / WinnowRareDenom))` — 10 parts-per-million of the
     * corpus, floored at the absolute r13 cap. The ABSOLUTE cap degenerates as the
-    * corpus grows (measured by WinnowProbe on the doubled corpus: at sf10's 1M docs,
-    * df<=4 keeps 6 fingerprint values and yields ONE pair), while a constant FRACTION
+    * corpus grows (measured on the doubled corpus: at sf10's 1M docs, df<=4 keeps 6
+    * fingerprint values and yields ONE pair), while a constant FRACTION
     * tracks it: cap(1M)=10 keeps 86 values, 52 pairs, and a candidate self-join
     * fan-out of only 2,364 rows. The cost model the cap buys: the fp-bucket self-join
     * fans out at most C(cap,2) pairs per fingerprint VALUE, so total candidates are
@@ -248,12 +248,6 @@ object Dedup {
     * tree is evaluated once per row, not once per reference inside the shingle lambda. */
   private def signatures(docs: DataFrame): DataFrame =
     signaturesFrom(shingleHashes(docs))
-
-  /** The doubled-corpus shingle-hash frame for [[ExplainDedupInternals]]'s plan
-    * evidence (r20) — the registered component queries checkpoint at construction, so
-    * the verify subplan is only printable through this accessor. */
-  private[ext] def debugShingleHashes(s: SparkSession, dir: String): DataFrame =
-    shingleHashes(doubledDocs(s, dir))
 
   /** One row per (doc, shingle occurrence): `(doc_id, n_toks, hv)` — the single
     * tokenize+shingle+hash pass every MinHash consumer (signatures, exact-Jaccard
@@ -475,7 +469,7 @@ object Dedup {
     * labels — repo-target-scoped, keyed by the input dir so sf runs don't clobber each
     * other. In production this is yesterday's labels table; here the parquet round-trip
     * makes the incremental fold start from a real persisted artifact instead of live
-    * lineage (and lets IncrBench time the fold alone). */
+    * lineage. */
   private[ext] def priorLabelsPath(dir: String): String =
     new java.io.File("target/graft_prior_labels/" +
       dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
@@ -487,49 +481,34 @@ object Dedup {
     new java.io.File("target/graft_admit_index/" +
       dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
 
-  /** The incremental maintenance fold, cost ∝ the TOUCHED slice (r12: the first cut
-    * star-compressed ALL prior components into the propagation, so on a
-    * mostly-size-2-cluster graph — |V_old| ≈ |E_old| — the fold cost stayed
-    * corpus-sized no matter how small the increment; IncrBench's incr_mod lens exposed
-    * it). Now the prior frame splits like the SCD2 fold: components the increment never
-    * touches (no member adjacent to a new doc) pass through BYTE-IDENTICALLY via an
-    * anti-join on their label — min-label propagation cannot change a component that
-    * gains no edge — and only the touched components re-enter as star edges (member →
-    * prior label) alongside the increment-touching pairs. The touched-label set is ∝
-    * increment size and broadcasts; the propagation's edge set is star-of-touched ∪
-    * increment pairs. Factored out so the registered query and [[IncrBench]] (which
-    * times this fold alone against a pre-written prior) run the SAME code path; the
-    * full-recompute equality gate (same oracle verbatim) is unchanged. */
+  /** The incremental maintenance fold, cost ∝ the TOUCHED slice: components the
+    * increment never touches (no member adjacent to a new doc) pass through
+    * BYTE-IDENTICALLY via an anti-join on their label — min-label propagation cannot
+    * change a component that gains no edge — and only the touched components re-enter
+    * as star edges (member → prior label) alongside the increment-touching pairs. The
+    * touched-label set is ∝ increment size and broadcasts; the propagation's edge set
+    * is star-of-touched ∪ increment pairs. Equality with the full recompute is the
+    * operator's definition: `dedup_components_incremental` shares `dedup_components`'
+    * oracle verbatim, and DedupIncrementalCcSpec pins it on synthetic graphs. */
   private[ext] def incrementalFold(s: SparkSession, prior: DataFrame,
                                    touchingNew: DataFrame): DataFrame = {
     import s.implicits._
-    val (untouched, star) = touchedSplit(s, prior, touchingNew)
-    propagateLabels(s, star.unionByName(touchingNew))
-      .unionByName(untouched.select($"id", $"label"))
-  }
-
-  /** The fold's prior-frame split — (untouched pass-through rows, star edges of the
-    * touched components) — factored so [[IncrBench]] reports the propagation's actual
-    * edge cardinality from the SAME code path it times. */
-  private[ext] def touchedSplit(s: SparkSession, prior: DataFrame,
-                                touchingNew: DataFrame): (DataFrame, DataFrame) = {
-    import s.implicits._
     val touchedIds = touchingNew.select($"doc_a".as("id"))
       .union(touchingNew.select($"doc_b".as("id"))).distinct()
-    // SEVERED (r20): the touched-label set (tiny, ∝ increment) is broadcast into BOTH
-    // split sides and is the only post-fold reference to the increment's pair frame —
+    // SEVERED: the touched-label set (tiny, ∝ increment) is broadcast into BOTH split
+    // sides and is the only post-fold reference to the increment's pair frame —
     // without the checkpoint, the registered query's final action re-derives it AFTER
     // the caller released the pairs cache and re-runs the whole LSH pipeline per
-    // broadcast build (measured r20: a 0.8 s 64-task recompute at the END of
-    // dedup_components_incremental). Materialized here, while the caller's caches are
-    // alive; the blocks are label-frame-sized and released by Bench's post-rep sweep.
+    // broadcast build. Materialized here, while the caller's caches are alive; the
+    // blocks are label-frame-sized and released by Bench's post-rep sweep.
     val touchedLabels = prior.join(touchedIds, "id").select($"label").distinct()
       .localCheckpoint()
     val untouched = prior.join(broadcast(touchedLabels), Seq("label"), "left_anti")
     val star = prior.join(broadcast(touchedLabels), Seq("label"), "left_semi")
       .filter($"id" =!= $"label")
       .select($"label".as("doc_a"), $"id".as("doc_b"))
-    (untouched, star)
+    propagateLabels(s, star.unionByName(touchingNew))
+      .unionByName(untouched.select($"id", $"label"))
   }
 
   /** Banded-LSH candidate pairs over the doubled corpus plus the CACHED signature frame
@@ -685,8 +664,8 @@ object Dedup {
       // them. The fixed testdata has no second snapshot, so the prior pass runs here,
       // but its labels go through a parquet round-trip (r11 verdict #4): the incremental
       // fold below starts from a severed, persisted frame — exactly the artifact
-      // hand-off a daily pipeline does, and what [[graft.IncrBench]] times in isolation
-      // — and the prior pass's checkpoint blocks are released, not leaked.
+      // hand-off a daily pipeline does — and the prior pass's checkpoint blocks are
+      // released, not leaked.
       val prior0 = propagateLabels(s, oldOld)
       prior0.write.mode("overwrite").parquet(priorLabelsPath(dir))
       releaseLocalCheckpoint(prior0)
@@ -1092,9 +1071,9 @@ object Dedup {
     // fingerprint counts fold into those counts (a delta fold — only the delta is
     // re-fingerprinted; the merge is a keyed sum over (index ∪ delta), never a
     // re-winnow of the corpus — WinnowAdmitIncrSpec proves the folded index EQUALS
-    // the full recompute, WinnowIncrBench measures fold cost ∝ delta), and wave 2 is
-    // screened against the folded index — a near-dup of an admitted wave-1 doc is now
-    // caught, which the frozen r13 index could never do.
+    // the full recompute), and wave 2 is screened against the folded index — a
+    // near-dup of an admitted wave-1 doc is now caught, which the frozen r13 index
+    // could never do.
     "dedup_winnow_admit_incremental" -> { (s, dir) =>
       import s.implicits._
       val docs = graft.engine.Tables(s, dir, "documents").select($"doc_id", $"text")

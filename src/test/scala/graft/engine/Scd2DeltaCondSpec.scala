@@ -4,12 +4,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * Pins the equivalence `scd2DeltaScnCond` (the pre-parse, scn-derived delta filter
- * `cdc_scd2_incremental` runs, r21 session 2) ≡ `scd2DeltaCond` (the post-parse
- * key-cohort definition the operator is specified by, and which Scd2IncrBench still
- * uses). The scn form exists so the filter can push below the ParseRedo projection —
- * it encodes mergeScript's scn/key arithmetic (scn = k*10+off; off 2/4 rows carry the
- * +10000000 inserted key; BASE rows carry scn = -1), so any change to that encoding
- * must fail HERE, loudly, before it silently drifts the delta slice.
+ * `cdc_scd2_incremental` runs) ≡ `scd2DeltaCond` (the post-parse key-cohort
+ * definition the operator is specified by). The scn form exists so the filter can push
+ * below the ParseRedo projection — it encodes mergeScript's scn/key arithmetic
+ * (scn = k*10+off; off 2/4 rows carry the +10000000 inserted key; BASE rows carry
+ * scn = -1), so any change to that encoding must fail HERE, loudly, before it silently
+ * drifts the delta slice.
  */
 class Scd2DeltaCondSpec extends AnyFunSuite {
 

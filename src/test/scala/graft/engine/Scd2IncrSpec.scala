@@ -8,8 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /**
  * Pins `CdcQueries.scd2IncrementalFold`'s two defining properties on a synthetic
  * version frame (the corpus-scale equality is oracle-gated — `cdc_scd2_incremental`
- * shares `cdc_scd2_history`'s SQL verbatim — and Scd2IncrBench re-checks it at every
- * measured scale; this spec pins the mechanism in isolation):
+ * shares `cdc_scd2_history`'s SQL verbatim; this spec pins the mechanism in isolation):
  *
  *  1. UNTOUCHED KEYS PASS THROUGH BYTE-IDENTICALLY — a key with no delta op keeps its
  *     exact prior rows (values, interval ends, data maps): the anti-join branch must

@@ -15,6 +15,10 @@
 # the ambient-drift timescale the r19 pairs measured (the +12% drift was across
 # 50 minutes), so pass-level alternation cancels it.
 #
+# The pairing artifact (per-build folds, common-query min sums, their ratio and the
+# per-query regressions) is written to target/bench_closing.json; no tracked file is
+# touched.
+#
 # Usage: tools/bench_closing.sh <prior-commit-ish> [sfDir] [passes]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -66,7 +70,7 @@ for i in $(seq 1 "$PASSES"); do
 done
 
 python3 - "$SHA" "$SFDIR" "$PASSES" "$T0" "${PASS_TIMES[@]}" <<'PY'
-import glob, json, re, sys
+import json, sys
 sha, sfdir, passes, t0 = sys.argv[1], sys.argv[2], int(sys.argv[3]), sys.argv[4]
 pass_times = sys.argv[5:]
 
@@ -116,24 +120,8 @@ art = {
     "head": head,
     "control": ctrl,
 }
-rounds = [int(re.search(r"_r(\d+)\.json$", p).group(1))
-          for p in glob.glob("BENCH_full_r*.json")
-          if re.search(r"_r(\d+)\.json$", p)]
-n = max(rounds) if rounds else 0
-with open(f"BENCH_control_r{n:02d}.json", "w") as f:
+with open("target/bench_closing.json", "w") as f:
     json.dump(art, f, indent=1)
-# the round's BENCH_full artifact (written by the last HEAD pass) gets the same
-# control block so a reader of either file sees the pairing
-full = f"BENCH_full_r{n:02d}.json"
-try:
-    d = json.load(open(full))
-    d["control"] = {k: art[k] for k in
-                    ("interleaved", "passes", "control_commit", "common_queries",
-                     "common_min_sum_current", "common_min_sum_control",
-                     "current_over_control", "window_started_utc")}
-    json.dump(d, open(full, "w"))
-except FileNotFoundError:
-    pass
 print(f"[closing] interleaved x{passes}: common={len(common)} "
       f"head_min_sum={h_sum:.1f}s control_min_sum={c_sum:.1f}s "
       f"ratio={h_sum/c_sum:.3f} regressions={len(regressions)} "

@@ -1,9 +1,14 @@
 #!/bin/bash
-# Decade-probe wrapper: runs graft.BenchOne on one named query under a disk watchdog
-# (a kneeing query can write 60+ GB/min of shuffle), with a hard wall-clock timeout.
+# Decade-probe wrapper: runs `graft.Bench <query>` on one named query at a time under a
+# disk watchdog (a kneeing query can write 60+ GB/min of shuffle), with a hard
+# wall-clock timeout, and prints the query's [min,med] entry from Bench's stdout line
+# (or its error entry).
 # Usage:
 #   tools/probe.sh <sfDir> <timeoutSec> <query> [query...]
-# Env passthrough: SPARK_GRAFT_SHUFFLE, SPARK_GRAFT_BENCH_REPS, SPARK_GRAFT_CPUS.
+# Env passthrough: SPARK_GRAFT_SHUFFLE, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_REPS
+# (default 1 here: a probe is a spot measurement). Bench's per-rep timeout is set to
+# <timeoutSec>, so only the watchdog bounds a probe; the stale-build-JVM sweep is off,
+# so a probe never touches a concurrent build.
 #
 # Isolation contract (r19): each query runs in its own JVM with its OWN
 # spark.local.dir under a per-run scratch root, launched via setsid so the
@@ -23,8 +28,9 @@ for q in "$@"; do
   LOCALDIR=$(mktemp -d "$SCRATCH_ROOT/graft-probe-${q}-XXXXXX") || {
     echo "PROBE $q SKIPPED: scratch dir unavailable under $SCRATCH_ROOT"; continue; }
   setsid timeout --signal=KILL "$TMO" \
-    env SPARK_GRAFT_SF_DIR="$SFDIR" \
-    tools/run.sh "-Dspark.local.dir=$LOCALDIR" graft.BenchOne "$q" \
+    env SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_BENCH_REPS="${SPARK_GRAFT_BENCH_REPS:-1}" \
+    SPARK_GRAFT_QUERY_TIMEOUT_SEC="$TMO" SPARK_GRAFT_KILL_STALE=0 \
+    tools/run.sh "-Dspark.local.dir=$LOCALDIR" graft.Bench "$q" \
     > "target/probe_${q}.log" 2>&1 &
   PID=$!
   while kill -0 $PID 2>/dev/null; do
@@ -39,7 +45,10 @@ for q in "$@"; do
   done
   wait $PID 2>/dev/null
   RC=$?
-  LINE=$(grep -h "^TIMING" "target/probe_${q}.log" | tail -1)
-  if [ -n "$LINE" ]; then echo "$LINE"; else echo "PROBE $q DIED rc=$RC (see target/probe_${q}.log)"; fi
+  # the query's entry in Bench's stdout line: "q":[min,med] when timed, "q":"msg" when
+  # it failed
+  ENTRY=$(grep -h '^{"metric":"total"' "target/probe_${q}.log" | tail -1 |
+    grep -oE "\"$q\":(\[[^]]*\]|\"[^\"]*\")")
+  if [ -n "$ENTRY" ]; then echo "PROBE $ENTRY"; else echo "PROBE $q DIED rc=$RC (see target/probe_${q}.log)"; fi
   rm -rf "$LOCALDIR" 2>/dev/null
 done
