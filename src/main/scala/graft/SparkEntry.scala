@@ -17,16 +17,24 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Every builder first registers
+    * the native functions on the session it is given
+    * ([[graft.functions.Registrations.ensure]]), so a session built without
+    * [[graft.functions.GraftExtensions]] (an external caller's) still resolves them. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.engine.Relational.queries ++
+    (graft.engine.Relational.queries ++
       graft.engine.Skew.queries ++
       graft.engine.Temporal.queries ++
       graft.engine.CdcQueries.queries ++
       graft.ext.TextOps.queries ++
       graft.ext.Dedup.queries ++
       graft.ext.Similarity.queries ++
-      graft.ext.Multimodal.queries
+      graft.ext.Multimodal.queries).map { case (name, build) =>
+      name -> { (spark: SparkSession, dir: String) =>
+        graft.functions.Registrations.ensure(spark)
+        build(spark, dir)
+      }
+    }
 
   /** Queries whose CONSTRUCTION executes a streaming harness (MemoryStream feed +
     * processAllAvailable): plan printers and other construct-only callers should skip

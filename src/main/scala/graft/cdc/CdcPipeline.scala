@@ -17,8 +17,8 @@ object CdcPipeline {
 
   /** A8 marker phrase (Task:275, the reference's single TEMPORARY_TABLE constant):
     * ONE definition feeding both the Column filter ([[tempTableFilter]]) and the
-    * head-fragment RedoEvent predicate in [[stream]] (ADVICE r5 — two string literals
-    * can drift). */
+    * head-fragment RedoEvent predicate in [[stream]], because two string literals can
+    * drift apart. */
   val TempTablePhrase = "temporary tables"
 
   /** A8 (Task:275): drop records whose redo mentions temporary tables. */
@@ -167,9 +167,9 @@ object CdcPipeline {
     // assembler's fuse as a HEAD-FRAGMENT check — the reference's exact placement (first
     // cursor row, before the CSF concat loop: OracleSourceTask2.java:275,
     // LogMinerThread2.java:263). Head-anchored, it cannot drop a committed DML whose DATA
-    // values contain the phrase (the r3 fused-text check was a superset that could,
-    // ADVICE r4), and run-scoped it cannot corrupt a fuse (the ADVICE-r3 hazard of a
-    // per-fragment filter).
+    // values contain the phrase (a check on the fused text would), and run-scoped it
+    // cannot corrupt a fuse (a per-fragment filter could drop a middle fragment and
+    // splice the run's neighbours together).
     val keep = isControl || (
       internalDdlFilter(col("operation"), col("info")) &&
         validTableName(col("tableName")) &&

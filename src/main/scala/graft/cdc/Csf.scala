@@ -38,8 +38,8 @@ object Csf {
    * placement for its content-based temp-table skip, checked on the first cursor row
    * BEFORE the CSF concat loop (LogMinerThread2.java:263, OracleSourceTask2.java:275) —
    * and a false verdict drops the whole run (head-fragment parity, NOT a check on the
-   * fused text: a committed DML whose data values happen to contain the phrase passes,
-   * ADVICE r4). Evaluating per-head here is also fuse-safe: a middle fragment can never
+   * fused text: a committed DML whose data values happen to contain the phrase passes).
+   * Evaluating per-head here is also fuse-safe: a middle fragment can never
    * be dropped out from under a run.
    *
    * Returns (fused events in order, still-open trailing run). The caller decides the fate of

@@ -49,10 +49,6 @@ object EnvelopeApply {
   def apply(snapshot: DataFrame, enveloped: DataFrame, schema: StructType): DataFrame = {
     val pk = Catalog.effectiveKeys(schema)
     require(pk.nonEmpty, "schema carries no pk/uq key metadata — see Catalog.withKeyMetadata")
-    // register on the session that will ANALYZE this plan: Dataset ops
-    // analyze against their OWN session, and the agg below is built on `enveloped` —
-    // snapshot's session only analyzes the final join, which needs no function lookup
-    graft.functions.EnvelopeFold.ensureRegistered(enveloped.sparkSession)
     // the typed key columns (catalog cast rule), then explicit ordering casts: the
     // aggregate's type gate is exact (bigint ordering columns), while a JSON/JDBC-sourced
     // envelope may carry int/decimal ordering columns
@@ -98,12 +94,12 @@ object EnvelopeApply {
 
   /** Keyed replica state carried across micro-batches: pk values (kept so a tombstone
     * emission still knows its key), the column overlay, the wholesale-replace flag, and
-    * the MAX APPLIED version tuple `(vcs, vscn, vseq)` (ADVICE r5: emissions must stay
-    * monotonic per key even when a batch delivers an event older than a prior batch's —
-    * emitting only THIS batch's last tuple would lose max_by in [[latestChanges]] and the
-    * late event's effect would silently vanish from the replica).
-    * One row-image per LIVE key — tombstoned keys are evicted (`state.remove`), so state
-    * is bounded by the live key count, not by every key ever deleted (ADVICE r4). */
+    * the MAX APPLIED version tuple `(vcs, vscn, vseq)` (emissions must stay monotonic per
+    * key even when a batch delivers an event older than a prior batch's — emitting only
+    * THIS batch's last tuple would lose max_by in [[latestChanges]] and the late event's
+    * effect would silently vanish from the replica). One row-image per LIVE key —
+    * tombstoned keys are evicted (`state.remove`), so state is bounded by the live key
+    * count, not by every key ever deleted. */
   final case class ReplicaState(pk: Map[String, String], deleted: Boolean,
                                 m: Map[String, String], replaced: Boolean,
                                 vcs: Long = Long.MinValue, vscn: Long = Long.MinValue,
@@ -112,8 +108,8 @@ object EnvelopeApply {
   /** One per-key emission per micro-batch that touched the key: the key's state AFTER
     * folding that batch's events. The version is the MAX ordering tuple
     * `(commit_scn, scn, seq)` ever applied to the key — max(prior batches, this batch) —
-    * so emissions are monotonic per key even under cross-batch out-of-order arrival
-    * (ADVICE r5), and survive a delete → state-eviction → re-insert cycle (a per-key
+    * so emissions are monotonic per key even under cross-batch out-of-order arrival,
+    * and survive a delete → state-eviction → re-insert cycle (a per-key
     * counter would restart at 1 and lose to the tombstone in [[latestChanges]]' max_by). */
   final case class ReplicaEmit(key: String, pk: Map[String, String], deleted: Boolean,
                                m: Map[String, String], replaced: Boolean,
@@ -133,15 +129,16 @@ object EnvelopeApply {
    * minimum any keyed applier holds); emissions are append-mode deltas and the latest
    * version per key IS the replica row — see [[latestChanges]].
    *
-   * CONTRACT (ADVICE r5): an UPDATE on a key whose tombstone was evicted in an EARLIER
-   * micro-batch rebuilds state with `replaced = false`, so columns the update doesn't set
-   * read through to the snapshot (the batch fold, which sees the DELETE in the same fold,
-   * would null them). This sequence is out of contract by construction: redo DML cannot
-   * UPDATE a deleted row — a key is only ever touched again via INSERT (which sets
-   * `replaced = true` and restores parity). Distinguishing "evicted tombstone" from
-   * "never-seen key" would require retaining every tombstone forever, the exact unbounded
-   * state growth eviction exists to prevent; the in-contract path is batch/stream
-   * identical (proven by `cdc_apply_merge` vs `cdc_apply_merge_stream`).
+   * CONTRACT (where the streaming fold may differ from the batch fold): an UPDATE on a key
+   * whose tombstone was evicted in an EARLIER micro-batch rebuilds state with `replaced =
+   * false`, so columns the update doesn't set read through to the snapshot (the batch fold,
+   * which sees the DELETE in the same fold, would null them). This sequence is out of
+   * contract by construction: redo DML cannot UPDATE a deleted row — a key is only ever
+   * touched again via INSERT (which sets `replaced = true` and restores parity).
+   * Distinguishing "evicted tombstone" from "never-seen key" would require retaining every
+   * tombstone forever, the exact unbounded state growth eviction exists to prevent; the
+   * in-contract path is batch/stream identical (proven by `cdc_apply_merge` vs
+   * `cdc_apply_merge_stream`).
    */
   def applyStreaming(enveloped: DataFrame, schema: StructType): Dataset[ReplicaEmit] = {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
@@ -177,14 +174,14 @@ object EnvelopeApply {
             case RedoEvent.Delete => st.copy(deleted = true, m = Map.empty, replaced = true)
             // `++` is key-presence overlay: an explicit null-valued entry (SET col = NULL)
             // replaces the accumulated value — same semantics as the batch fold's
-            // map_filter + map_concat (ADVICE r4)
+            // map_filter + map_concat, so SET col = NULL nulls the replica column
             case _                => st.copy(deleted = false, m = st.m ++ data)
           }
         }
         // emission version = max(version already applied in prior batches, this batch's
         // last event): monotonic per key even if this batch delivered only an event older
-        // than a prior batch's (ADVICE r5 — emitting the batch-local tuple would lose
-        // max_by in latestChanges and silently drop the late event's effect)
+        // than a prior batch's (emitting the batch-local tuple would lose max_by in
+        // latestChanges and silently drop the late event's effect)
         val last = sorted.last
         val ver = Seq((st.vcs, st.vscn, st.vseq),
           (last.commit_scn, last.scn, last.seq)).max

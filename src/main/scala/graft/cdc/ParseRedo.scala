@@ -3,7 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.call_function
 
-import graft.functions.ParseRedoExpr
+import graft.functions.Registrations
 
 /**
  * Spark surface of [[RedoSqlParser]] (A12): `parse(col)` plans the NATIVE Catalyst
@@ -22,16 +22,20 @@ import graft.functions.ParseRedoExpr
  * workaround (`asNondeterministic`) pins one evaluation but blinds Catalyst to pushdown.
  * The native expression needs neither — it is honest about determinism, skips the
  * Catalyst<->Scala converters, and evaluates once per row under CollapseProject's
- * `ExtractValue` handling. Registration is lazy and idempotent per session, so any
- * session reaches the expression without needing `spark.sql.extensions` configured
- * (sessions built `.withExtensions(new GraftExtensions)` are registered up front).
+ * `ExtractValue` handling.
+ *
+ * [[parse]] is one of the two lazy registration points of [[Registrations]] (the other is
+ * `graft.SparkEntry.queries`): callers that plan the CDC chain directly, on a session
+ * built without [[graft.functions.GraftExtensions]], still resolve the function. It
+ * registers the whole list, so `envelope_fold` is there too for [[EnvelopeApply]] over
+ * the parsed envelope.
  */
 object ParseRedo {
 
   /** `parse(sql_redo)` as a column: struct(operation, owner, table, data, before, ok).
     * `unescape` maps the reference's map.unescaped.strings knob (Config:29). */
   def parse(sqlRedo: Column, unescape: Boolean = true): Column = {
-    ParseRedoExpr.ensureRegistered(SparkSession.active)
+    Registrations.ensure(SparkSession.active)
     call_function(if (unescape) "parse_redo" else "parse_redo_noescape", sqlRedo)
   }
 }

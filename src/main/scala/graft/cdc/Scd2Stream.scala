@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
  * when both an open and a closed emission exist — the same changelog-compaction shape
  * the streaming apply uses for replica rows.
  *
- * LATE-EVENT DIVERGENCE (r10 verdict #6): a commit arriving with scn INSIDE an
+ * LATE-EVENT DIVERGENCE: a commit arriving with scn INSIDE an
  * already-closed interval cannot restate here — closed versions left the state store at
  * close time, and append-mode emissions are immutable, so the late op is folded at its
  * ARRIVAL position (it opens a new version after the current one) rather than at its scn

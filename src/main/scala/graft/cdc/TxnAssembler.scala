@@ -187,11 +187,12 @@ object TxnAssembler {
    * by SCN before the state update (SURVEY.md §7 hard-part 1: Spark guarantees no intra-group
    * order; the reference relied on a single total-order cursor).
    *
-   * ORDERING REQUIREMENT (ADVICE r1): per-XID event order must be preserved by the
-   * transport — in the Kafka deployment that means the producer keys messages by XID so
-   * one transaction lives in one partition. If a COMMIT arrives in an earlier micro-batch
-   * than some of its DML, the late DML reopens a buffer that only the timeout can clear;
-   * `droppedTxns` makes that loss observable instead of silent.
+   * ORDERING REQUIREMENT (the per-group sort only orders one micro-batch): per-XID event
+   * order must be preserved by the transport — in the Kafka deployment that means the
+   * producer keys messages by XID so one transaction lives in one partition. If a COMMIT
+   * arrives in an earlier micro-batch than some of its DML, the late DML reopens a buffer
+   * that only the timeout can clear; `droppedTxns` makes that loss observable instead of
+   * silent.
    *
    * @param abandonedTxnTimeout processing-time timeout after which an open transaction's
    *                            buffer is dropped (bounded state at scale); None disables
@@ -212,7 +213,7 @@ object TxnAssembler {
   final case class TxnOut(committed: Option[CommittedDml], abandoned: Option[AbandonedTxn])
 
   /**
-   * Streaming assembly with DETERMINISTIC abandoned-transaction eviction (r8 verdict #3):
+   * Streaming assembly with DETERMINISTIC abandoned-transaction eviction:
    * like [[assembleStreaming]], but the timeout clock is the stream's WATERMARK
    * ([[GroupStateTimeout.EventTimeTimeout]]) instead of wall time, and a timed-out buffer
    * is EMITTED as an [[AbandonedTxn]] DLQ record instead of silently dropped.

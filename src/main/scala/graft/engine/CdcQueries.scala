@@ -240,8 +240,8 @@ object CdcQueries {
         .as[(Long, String)].collect() // driver-side feed is inherent to MemoryStream
       val all = rows.flatMap { case (k, st) => txnEvents(k, st) }
       val (opening, closing) = all.partition(e => e.seq % 10 <= 1) // START+INSERT vs rest
-      val out = StreamGate.runTwoBatches(s, Encoders.product[RedoEvent],
-          "cdc_txn_stream_sink", opening.toSeq, closing.toSeq) { ds =>
+      val out = StreamGate.runBatches(s, Encoders.product[RedoEvent],
+          "cdc_txn_stream_sink", Seq(opening.toSeq, closing.toSeq)) { ds =>
         TxnAssembler.assembleStreaming(ds, abandonedTxnTimeout = None).toDF()
       }
       reconstructStatus(out).orderBy($"status")

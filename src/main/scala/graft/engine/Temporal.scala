@@ -200,7 +200,7 @@ object Temporal {
       val (b1, b2) = rows.splitAt(rows.length / 2)
       val nation = Tables(s, dir, "nation").select($"n_nationkey", $"n_name")
       val enc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
-      val out = StreamGate.runTwoBatches(s, enc, "events_enrich_stream_sink", b1, b2) { ds =>
+      val out = StreamGate.runBatches(s, enc, "events_enrich_stream_sink", Seq(b1, b2)) { ds =>
         ds.toDF("event_id", "user_id", "value_cents")
           .join(broadcast(nation), pmod($"user_id", lit(25L)) === $"n_nationkey")
           .select($"event_id", $"n_name", $"value_cents")
@@ -234,10 +234,10 @@ object Temporal {
       else {
       val sentinelUs = rows.last._1 + 30L * 24 * 3600 * 1000000L
       val (h1, h2) = rows.splitAt(rows.length / 2)
-      val out = StreamGate.runTwoBatches(s,
+      val out = StreamGate.runBatches(s,
           Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.scalaDouble),
           "events_window_stream_sink",
-          h1.toSeq, h2.toSeq :+ ((sentinelUs, "sentinel", 0.0))) { ds =>
+          Seq(h1.toSeq, h2.toSeq :+ ((sentinelUs, "sentinel", 0.0)))) { ds =>
         ds.toDF("ts_us", "event_type", "value")
           .withColumn("ts", timestamp_micros($"ts_us"))
           .withWatermark("ts", "1 minute")
@@ -272,10 +272,10 @@ object Temporal {
       else {
       val sentinelUs = rows.last._1 + 30L * 24 * 3600 * 1000000L
       val (h1, h2) = rows.splitAt(rows.length / 2)
-      val out = StreamGate.runTwoBatches(s,
+      val out = StreamGate.runBatches(s,
           Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
           "events_topk_stream_sink",
-          h1.toSeq, h2.toSeq :+ ((sentinelUs, -1L))) { ds =>
+          Seq(h1.toSeq, h2.toSeq :+ ((sentinelUs, -1L)))) { ds =>
         ds.toDF("ts_us", "user_id")
           .withColumn("ts", timestamp_micros($"ts_us"))
           .withWatermark("ts", "1 minute")
@@ -303,9 +303,9 @@ object Temporal {
         .filter($"event_id" % 4 === 0)
         .select($"event_id", $"event_type")
         .as[(Long, String)].collect().sortBy(_._1).toSeq
-      val out = StreamGate.runTwoBatches(s,
+      val out = StreamGate.runBatches(s,
           Encoders.tuple(Encoders.scalaLong, Encoders.STRING),
-          "events_dedup_stream_sink", rows, rows) { ds =>
+          "events_dedup_stream_sink", Seq(rows, rows)) { ds =>
         ds.toDF("event_id", "event_type").dropDuplicates("event_id")
       }
       out.groupBy($"event_type").agg(count(lit(1)).as("cnt")).orderBy($"event_type")
@@ -332,9 +332,9 @@ object Temporal {
       // far-future sentinel: its watermark closes every real session (append mode)
       val sentinel = (-1L, rows.last._2 + 30L * 24 * 3600 * 1000000L, 0.0)
       val (h1, h2) = rows.splitAt(rows.length / 2)
-      val out = StreamGate.runTwoBatches(s,
+      val out = StreamGate.runBatches(s,
           Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble),
-          "events_session_stream_sink", h1, h2 :+ sentinel) { ds =>
+          "events_session_stream_sink", Seq(h1, h2 :+ sentinel)) { ds =>
         ds.toDF("user_id", "ts_us", "value")
           .withColumn("ts", timestamp_micros($"ts_us"))
           .withWatermark("ts", "1 minute")
@@ -554,9 +554,9 @@ object Temporal {
       val rows = events.as[Long].collect().toSeq
         .map(u => ((u % HhStreamShards).toInt, u))
       val (b1, b2) = rows.splitAt(rows.length / 2)
-      val out = StreamGate.runTwoBatches(s,
+      val out = StreamGate.runBatches(s,
           Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong),
-          "events_hh_stream_sink", b1, b2) { ds =>
+          "events_hh_stream_sink", Seq(b1, b2)) { ds =>
         MisraGries.streamCandidates(ds.as[(Int, Long)], HeavyHitterK).toDF()
       }
       val latest = out

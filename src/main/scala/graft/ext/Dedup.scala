@@ -1262,7 +1262,6 @@ object Dedup {
   private[ext] def winnowAdmitPlan(s: SparkSession,
       rareIdx: org.apache.spark.broadcast.Broadcast[Array[Long]])
       : (org.apache.spark.sql.Dataset[(Long, String)] => DataFrame, () => Unit) = {
-    graft.functions.WinnowSelect.ensureRegistered(s)
     val fpsCol = array_distinct(transform(
       call_function("winnow_select", col("text")), x => x.getField("fp")))
     val (probe, name) = graft.functions.SortedSetCount.columnFor(s, rareIdx, fpsCol)

@@ -26,12 +26,11 @@ object Similarity {
     * fold evaluates interpreted; `vec_dot` emits the primitive loop into whole-stage
     * codegen with bit-identical sequential-sum + null semantics; the long variant keeps
     * overflow loud via multiplyExact/addExact like the ANSI fold). */
-  // Pure Column combinator: `call_function` resolves by NAME at analysis time, so the
-  // session that will analyze the plan must have `vec_dot` registered — every builder in
-  // this file calls `VecDot.ensureRegistered(s)` on its explicit session (directly or via
-  // `milliQ`/`pqAdcRanked`) before constructing Columns. Registration deliberately does
-  // NOT happen here: `SparkSession.active` is the thread-active session, which is not
-  // necessarily the session the caller will run the query on (ADVICE r7).
+  // Pure Column combinator: `call_function` resolves by NAME when the plan's session
+  // analyzes it. Sessions built with `GraftExtensions` have `vec_dot` from the start, and
+  // `SparkEntry.queries` registers it on any other session before a builder runs. Nothing
+  // registers here: `SparkSession.active` is the thread-active session, which is not
+  // necessarily the session the caller will run the query on.
   def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 
   private def toDouble(c: Column): Column = transform(c, _.cast("double"))
@@ -105,7 +104,6 @@ object Similarity {
     * domain shared by the k-means, PQ and trained-IVF chains. */
   private def milliQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VecDot.ensureRegistered(s)
     graft.engine.Tables(s, dir, "embeddings")
       .select($"vec_id",
         transform($"embedding", x => (x.cast("double") * 1000).cast("long")).as("qv"))
@@ -196,7 +194,6 @@ object Similarity {
   private def pqArtifacts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
     import s.implicits._
-    graft.functions.VecDot.ensureRegistered(s) // analyze against THIS session (ADVICE r6)
     pqArtifactsOver(graft.engine.Tables(s, dir, "embeddings")
       .select($"vec_id",
         transform($"embedding", x => (x.cast("double") * 1000).cast("long")).as("qv")))
@@ -744,7 +741,6 @@ object Similarity {
     // same double whether folded once or per pair.
     "simsearch_topk" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.VecDot.ensureRegistered(s) // analyze against THIS session (ADVICE r6)
       val emb = graft.engine.Tables(s, dir, "embeddings")
         .select($"vec_id", toDouble($"embedding").as("v"))
         .withColumn("nrm", sqrt(dot($"v", $"v")))
@@ -762,7 +758,6 @@ object Similarity {
     // sign-random-projection LSH: 4 fixed hyperplanes -> 16 buckets
     "simsearch_lsh_buckets" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.VecDot.ensureRegistered(s) // analyze against THIS session (ADVICE r6)
       val emb = graft.engine.Tables(s, dir, "embeddings")
         .select($"vec_id", toDouble($"embedding").as("v"))
       val planes = emb.filter($"vec_id".isin(PlaneIds: _*))
@@ -781,7 +776,6 @@ object Similarity {
     // next to the brute-force baseline.
     "simsearch_ivf" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.VecDot.ensureRegistered(s) // analyze against THIS session (ADVICE r6)
       val base = graft.engine.Tables(s, dir, "embeddings")
         .select($"vec_id", toDouble($"embedding").as("v"))
         .withColumn("nrm", sqrt(dot($"v", $"v"))) // folded once, reused across centroids AND probes
@@ -818,7 +812,6 @@ object Similarity {
     // the metadata join co-located; the query set stays the broadcast side.
     "simsearch_filtered" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.VecDot.ensureRegistered(s) // analyze against THIS session (ADVICE r6)
       val meta = graft.engine.Tables(s, dir, "documents")
         .filter($"lang".isin("en", "de") && $"n_chars" >= 200L)
         .select($"doc_id".as("vec_id"))
@@ -1145,7 +1138,6 @@ object Similarity {
     // per vector so each candidate pair costs one dot product.
     "dedup_embedding_cosine" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.VecDot.ensureRegistered(s) // analyze against THIS session (ADVICE r6)
       val base = graft.engine.Tables(s, dir, "embeddings")
         .select($"vec_id", toDouble($"embedding").as("v"))
       val emb = base.union(base.select(($"vec_id" + DupIdOffset).as("vec_id"), $"v"))
@@ -1196,7 +1188,6 @@ object Similarity {
     // never widen a vector before an exchange.
     "dedup_embedding_cosine_rel" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.VecDot.ensureRegistered(s)
       val n = graft.engine.Tables(s, dir, "embeddings").count()
       val p = (10 to 61).find(b => (1L << (b + 1)) >= n).getOrElse(
         sys.error(s"dedup_embedding_cosine_rel: corpus $n exceeds 2^62 bucket space"))
@@ -1250,7 +1241,6 @@ object Similarity {
     // which is exactly the packing a serving stack performs.
     "rag_context_pack" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.VecDot.ensureRegistered(s) // analyze against THIS session
       val emb = graft.engine.Tables(s, dir, "embeddings")
         .select($"vec_id", toDouble($"embedding").as("v"))
         .withColumn("nrm", sqrt(dot($"v", $"v")))

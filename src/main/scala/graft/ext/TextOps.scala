@@ -42,7 +42,6 @@ object TextOps {
     * construction; only the selected ~2/(w+1) density of fingerprints ever becomes
     * rows. Callers aggregate or join the output and pay only their own exchanges. */
   private[ext] def winnowFingerprints(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.WinnowSelect.ensureRegistered(s) // analyze against THIS session
     docs.select(col("doc_id"), explode(call_function("winnow_select", col("text"))).as("_wn_s"))
       .select(col("doc_id"), col("_wn_s.pos").as("pos"), col("_wn_s.fp").as("fp"))
   }
@@ -176,7 +175,6 @@ object TextOps {
     // same single-pass replacement for split+filter+regexp_replace, oracle unchanged).
     "text_quality" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.TextScan.ensureRegistered(s)
       graft.engine.Tables(s, dir, "documents")
         .select($"lang", $"n_chars", call_function("text_scan", $"text").as("sc"))
         .select($"lang",
@@ -213,7 +211,6 @@ object TextOps {
     // multi-referenced producer separate), so the scan runs once per row.
     "text_quality_model" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.TextScan.ensureRegistered(s)
       graft.engine.Tables(s, dir, "documents")
         .select($"doc_id", $"n_chars",
           call_function("text_scan", $"text").as("sc"))
@@ -243,7 +240,6 @@ object TextOps {
     // regex/list way, hash gate proves identity).
     "text_langid" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.TextLangIdScan.ensureRegistered(s)
       graft.engine.Tables(s, dir, "documents")
         .select($"doc_id", $"lang", call_function("text_langid_scan", $"text").as("sc"))
         .select($"doc_id", $"lang",
@@ -265,7 +261,6 @@ object TextOps {
     // gate proves value identity).
     "text_token_regex" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.TextBpeCount.ensureRegistered(s)
       graft.engine.Tables(s, dir, "documents")
         .select($"lang", call_function("text_bpe_count", $"text").as("tok_cnt"))
         .groupBy($"lang")
@@ -320,7 +315,6 @@ object TextOps {
     // both forms, so the oracle (unchanged) proves value identity.
     "text_repetition" -> { (s, dir) =>
       import s.implicits._
-      graft.functions.TextTriRep.ensureRegistered(s)
       graft.engine.Tables(s, dir, "documents")
         .select($"doc_id", call_function("text_tri_rep", $"text").as("sc"))
         .filter($"sc".isNotNull)

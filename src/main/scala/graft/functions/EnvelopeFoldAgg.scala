@@ -2,10 +2,9 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
@@ -235,25 +234,4 @@ object EnvelopeFold {
     StructField("deleted", BooleanType, nullable = false),
     StructField("m", MapType(StringType, StringType, valueContainsNull = true), nullable = false),
     StructField("replaced", BooleanType, nullable = false)))
-
-  private def build(name: String)(children: Seq[Expression]): Expression = {
-    if (children.size != 5)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map("functionName" -> name, "expectedNum" -> "5",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    EnvelopeFold(children(0), children(1), children(2), children(3), children(4))
-  }
-
-  private[graft] val registrations
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (new FunctionIdentifier("envelope_fold"),
-      new ExpressionInfo(classOf[EnvelopeFold].getName, "envelope_fold"),
-      build("envelope_fold") _))
-
-  /** Idempotent session-registry registration — same mechanism as
-    * [[VecDot.ensureRegistered]]; callers pass the session that will ANALYZE the plan
-    * (ADVICE r6: never rely on the thread-local active session). */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registrations.ensure(spark, registrations)
 }

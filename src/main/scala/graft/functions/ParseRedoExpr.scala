@@ -2,9 +2,7 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -17,13 +15,14 @@ import graft.cdc.RedoSqlParser
  * A12 as a native Catalyst expression: `parse_redo(sql_redo)` returning
  * `struct<operation, owner, table, data map<string,string>, before map<string,string>, ok>`.
  *
- * Compared to the Scala UDF ([[graft.cdc.ParseRedo]]), this skips the UDF's
- * Catalyst<->Scala converters on both sides (the maps are built directly as
- * [[ArrayBasedMapData]]) and needs no nondeterminism workaround — it is honest about
- * determinism, foldable-safe, and null-propagating like any builtin. Evaluation is
- * CodegenFallback: the parse is a branchy tokenizer that would not benefit from inline
- * Java generation, and the fallback keeps the surrounding projection inside whole-stage
- * codegen.
+ * [[graft.cdc.ParseRedo.parse]] plans it by name. Compared to a Scala UDF over
+ * [[RedoSqlParser]], it skips the Catalyst<->Scala converters on both sides (the maps are
+ * built directly as [[ArrayBasedMapData]]) and needs no nondeterminism workaround — it is
+ * honest about determinism, foldable-safe, and null-propagating like any builtin.
+ * Evaluation is CodegenFallback: the parse is a branchy tokenizer that would not benefit
+ * from inline Java generation, and the fallback keeps the surrounding projection inside
+ * whole-stage codegen. Registered as `parse_redo` and `parse_redo_noescape` in
+ * [[Registrations.all]].
  */
 case class ParseRedoExpr(child: Expression, unescape: Boolean = true)
     extends UnaryExpression with CodegenFallback {
@@ -37,7 +36,7 @@ case class ParseRedoExpr(child: Expression, unescape: Boolean = true)
   /** Statement order preserved, duplicate columns last-wins (Map semantics), and SQL-NULL
     * values kept as EXPLICIT null map entries — the reference envelope carries null struct
     * fields (Utils:392,397,405), and a consumer applying an `UPDATE SET col = NULL` must be
-    * able to distinguish "column nulled" from "column untouched" (ADVICE r4). */
+    * able to distinguish "column nulled" from "column untouched". */
   private def mapData(kvs: Seq[(String, Option[String])]): ArrayBasedMapData = {
     val dedup = mutable.LinkedHashMap.empty[String, Option[String]]
     kvs.foreach { case (k, v) => dedup(k) = v }
@@ -70,48 +69,4 @@ object ParseRedoExpr {
     StructField("data", MapType(StringType, StringType, valueContainsNull = true), nullable = false),
     StructField("before", MapType(StringType, StringType, valueContainsNull = true), nullable = false),
     StructField("ok", BooleanType, nullable = false)))
-
-  /** The function surface: both unescape postures (map.unescaped.strings, Config:29). */
-  private def unary(name: String, unescape: Boolean)(children: Seq[Expression]): Expression = {
-    // a silent children.head would discard extra arguments (a user passing a hoped-for
-    // flag argument gets wrong semantics with no diagnostic) and die on zero args with a
-    // bare NoSuchElementException instead of an arity error at analysis
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map("functionName" -> name, "expectedNum" -> "1",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    ParseRedoExpr(children.head, unescape)
-  }
-  private[graft] val registrations
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (new FunctionIdentifier("parse_redo"),
-      new ExpressionInfo(classOf[ParseRedoExpr].getName, "parse_redo"),
-      unary("parse_redo", unescape = true) _),
-    (new FunctionIdentifier("parse_redo_noescape"),
-      new ExpressionInfo(classOf[ParseRedoExpr].getName, "parse_redo_noescape"),
-      unary("parse_redo_noescape", unescape = false) _))
-
-  /**
-   * Idempotently register `parse_redo`/`parse_redo_noescape` in the session's function
-   * registry — the runtime path for sessions not built with [[GraftExtensions]] (e.g. the
-   * driver's own session). Session-local (not the global UDF registry), same target
-   * `injectFunction` writes to.
-   */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registrations.ensure(spark, registrations)
-}
-
-/**
- * SparkSessionExtensions entry point: registers `parse_redo` (+ `_noescape`), `vec_dot`,
- * and the `envelope_fold` aggregate in the session function registry, so both SQL
- * (`SELECT parse_redo(sql_redo).data FROM ...`, `SELECT k, envelope_fold(...) GROUP BY
- * k`) and the DataFrame API (`call_function("parse_redo", col)`) reach the native
- * expressions. Activate with `.withExtensions(new GraftExtensions)` or
- * `spark.sql.extensions=graft.functions.GraftExtensions`.
- */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    (ParseRedoExpr.registrations ++ VecDot.registrations ++ EnvelopeFold.registrations)
-      .foreach(ext.injectFunction)
 }

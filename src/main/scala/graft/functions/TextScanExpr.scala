@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -14,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * scorer and the boolean gates need, returned as
  * `struct<n_toks, stop_cnt, punct_cnt, digit_cnt>`.
  *
- * Why a native expression (VERDICT r18 #5, the WinnowSelect lesson applied): the
+ * Why a native expression (the WinnowSelect lesson applied to a pure map-side scan): the
  * Column-algebra form of `text_quality_model` was the most expensive registered query
  * at sf100 (376.8 s) and PURE map-side — per document it paid
  *  - `split(trim(text), "\\s+")` + a filter lambda: a regex pass that ALLOCATES one
@@ -42,14 +40,9 @@ import org.apache.spark.unsafe.types.UTF8String
  *    regex-stripped copy;
  *  - `digit_cnt` counts `[0-9]` code points.
  */
-case class TextScan(child: Expression) extends UnaryExpression with CodegenFallback {
+case class TextScan(child: Expression)
+    extends UnaryExpression with StringArgument with CodegenFallback {
   import TextScan._
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${t.simpleString}")
-  }
 
   override def dataType: DataType = OutType
   override def prettyName: String = "text_scan"
@@ -98,7 +91,7 @@ case class TextScan(child: Expression) extends UnaryExpression with CodegenFallb
 /**
  * `text_bpe_count(text)` — the BPE-pretokenizer token count
  * `size(regexp_extract_all(text, "[a-z]+|[0-9]+|[^a-z0-9\s]"))` as one pass over the
- * UTF-8 bytes (r19, the same fusion as [[TextScan]]: at sf100 the regex form was a
+ * UTF-8 bytes (the same fusion as [[TextScan]]: at sf100 the regex form was a
  * 69.4 s pure map stage). Match semantics of the Java alternation, replicated
  * exactly: at each scan position the matcher takes a GREEDY maximal `[a-z]+` run, else
  * a maximal `[0-9]+` run, else — if the code point is not `\s` — one single-code-point
@@ -110,13 +103,8 @@ case class TextScan(child: Expression) extends UnaryExpression with CodegenFallb
  * the value-identity proof; TextScanSpec property-sweeps this against the JVM
  * regex on the hostile alphabet.
  */
-case class TextBpeCount(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${t.simpleString}")
-  }
-
+case class TextBpeCount(child: Expression)
+    extends UnaryExpression with StringArgument with CodegenFallback {
   override def dataType: DataType = LongType
   override def prettyName: String = "text_bpe_count"
 
@@ -148,45 +136,20 @@ case class TextBpeCount(child: Expression) extends UnaryExpression with CodegenF
     copy(child = newChild)
 }
 
-object TextBpeCount {
-  private def unary(name: String)(children: Seq[Expression]): Expression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map("functionName" -> name, "expectedNum" -> "1",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    TextBpeCount(children.head)
-  }
-
-  private[graft] val registrations
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (new FunctionIdentifier("text_bpe_count"),
-      new ExpressionInfo(classOf[TextBpeCount].getName, "text_bpe_count"),
-      unary("text_bpe_count") _))
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registrations.ensure(spark, registrations)
-}
-
 /**
  * `text_langid_scan(text)` — the four language-marker vote counts of `text_langid`
  * (`size(filter(tokens(text), t => words.map(t === _).reduce(_ || _)))` per language)
  * as one pass over the UTF-8 bytes, returned as
- * `struct<en_score, de_score, fr_score, es_score>` (r19; the filter-lambda form was a
+ * `struct<en_score, de_score, fr_score, es_score>` (the filter-lambda form was a
  * 17.9 s map stage at sf100 — four token-array traversals per doc on top of the
  * split). Tokenization is [[TextScan]]'s: maximal non-`\s` code-point runs. Marker
  * sets are the fixed en/de/fr/es triples (all ASCII, byte equality) — the canonical
  * list lives here as [[TextLangIdScan.Markers]] and the spec pins it against
  * TextOps' own langMarkers.
  */
-case class TextLangIdScan(child: Expression) extends UnaryExpression with CodegenFallback {
+case class TextLangIdScan(child: Expression)
+    extends UnaryExpression with StringArgument with CodegenFallback {
   import TextLangIdScan._
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${t.simpleString}")
-  }
 
   override def dataType: DataType = OutType
   override def prettyName: String = "text_langid_scan"
@@ -251,24 +214,6 @@ object TextLangIdScan {
       case _ => ()
     }
   }
-
-  private def unary(name: String)(children: Seq[Expression]): Expression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map("functionName" -> name, "expectedNum" -> "1",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    TextLangIdScan(children.head)
-  }
-
-  private[graft] val registrations
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (new FunctionIdentifier("text_langid_scan"),
-      new ExpressionInfo(classOf[TextLangIdScan].getName, "text_langid_scan"),
-      unary("text_langid_scan") _))
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registrations.ensure(spark, registrations)
 }
 
 /**
@@ -279,7 +224,7 @@ object TextLangIdScan {
  * than 3 tokens (such documents produce no exploded rows in the Column form and are
  * absent from the output; callers filter nulls).
  *
- * Why (r19): the Column form exploded ~85 trigram rows per document (~450M at sf100),
+ * Why: the Column form exploded ~85 trigram rows per document (~450M at sf100),
  * computed `conv(substr(md5(tri),1,8),16,10)` per OCCURRENCE, and shuffled every row
  * for a (doc_id, h) groupBy — 73.3 s and 10 GB of window/agg spill at sf100 for an
  * aggregation that never leaves the document. Here the trigram hash counts fold in a
@@ -288,14 +233,9 @@ object TextLangIdScan {
  * runs over the token spans without building trigram strings, and the only shuffle
  * left in the query is the final presentation sort.
  */
-case class TextTriRep(child: Expression) extends UnaryExpression with CodegenFallback {
+case class TextTriRep(child: Expression)
+    extends UnaryExpression with StringArgument with CodegenFallback {
   import TextTriRep._
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${t.simpleString}")
-  }
 
   override def dataType: DataType = OutType
   override def nullable: Boolean = true
@@ -355,24 +295,6 @@ object TextTriRep {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
-
-  private def unary(name: String)(children: Seq[Expression]): Expression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map("functionName" -> name, "expectedNum" -> "1",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    TextTriRep(children.head)
-  }
-
-  private[graft] val registrations
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (new FunctionIdentifier("text_tri_rep"),
-      new ExpressionInfo(classOf[TextTriRep].getName, "text_tri_rep"),
-      unary("text_tri_rep") _))
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registrations.ensure(spark, registrations)
 }
 
 object TextScan {
@@ -399,24 +321,4 @@ object TextScan {
       (b0 == 't' && b1 == 'h' && b2 == 'e') || (b0 == 'a' && b1 == 'n' && b2 == 'd')
     case _ => false
   }
-
-  private def unary(name: String)(children: Seq[Expression]): Expression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map("functionName" -> name, "expectedNum" -> "1",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    TextScan(children.head)
-  }
-
-  private[graft] val registrations
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (new FunctionIdentifier("text_scan"),
-      new ExpressionInfo(classOf[TextScan].getName, "text_scan"),
-      unary("text_scan") _))
-
-  /** Idempotent session-registry registration — same mechanism as
-    * [[VecDot.ensureRegistered]]. */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registrations.ensure(spark, registrations)
 }

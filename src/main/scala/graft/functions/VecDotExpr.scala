@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
@@ -39,9 +38,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
  * the engine's default NON-ANSI mode and would have wrapped silently on overflow, so this
  * is a deliberate behavior CHANGE toward strictness, not a preserved semantic —
  * unreachable today, but if quantization scale ever grows, overflow surfaces as an error
- * here where the old fold would have corrupted results (ADVICE r6/r7). One documented
- * divergence in that corner: the
- * loop short-circuits to NULL on a null element / length mismatch BEFORE reaching a later
+ * here where the old fold would have corrupted results. One documented divergence in
+ * that corner: the loop short-circuits to NULL on a null element / length mismatch BEFORE reaching a later
  * overflowing product, while the HOF fold materializes every pairwise product first
  * (zip_with) and would throw. Null-or-mismatch inputs that ALSO overflow are outside any
  * caller's contract here (quantization bounds products to ~2^40); choosing NULL keeps the
@@ -125,26 +123,4 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): VecDot = copy(left = newLeft, right = newRight)
-}
-
-object VecDot {
-  private def binary(name: String)(children: Seq[Expression]): Expression = {
-    if (children.size != 2)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map("functionName" -> name, "expectedNum" -> "2",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    VecDot(children.head, children(1))
-  }
-
-  private[graft] val registrations
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      binary("vec_dot") _))
-
-  /** Idempotent session-registry registration — same mechanism as
-    * [[ParseRedoExpr.ensureRegistered]]. */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registrations.ensure(spark, registrations)
 }

@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -41,14 +39,9 @@ import org.apache.spark.unsafe.types.UTF8String
  * exists, and the deque's pop-on->= makes the rightmost minimal position survive ties
  * exactly like `row_number() OVER (ORDER BY hv ASC, i DESC)`.
  */
-case class WinnowSelect(child: Expression) extends UnaryExpression with CodegenFallback {
+case class WinnowSelect(child: Expression)
+    extends UnaryExpression with StringArgument with CodegenFallback {
   import WinnowSelect._
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${t.simpleString}")
-  }
 
   override def dataType: DataType = OutType
   override def prettyName: String = "winnow_select"
@@ -107,24 +100,4 @@ object WinnowSelect {
   val OutType: DataType = ArrayType(StructType(Seq(
     StructField("pos", LongType, nullable = false),
     StructField("fp", LongType, nullable = false))), containsNull = false)
-
-  private def unary(name: String)(children: Seq[Expression]): Expression = {
-    if (children.size != 1)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map("functionName" -> name, "expectedNum" -> "1",
-          "actualNum" -> children.size.toString, "docroot" -> ""))
-    WinnowSelect(children.head)
-  }
-
-  private[graft] val registrations
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (new FunctionIdentifier("winnow_select"),
-      new ExpressionInfo(classOf[WinnowSelect].getName, "winnow_select"),
-      unary("winnow_select") _))
-
-  /** Idempotent session-registry registration — same mechanism as
-    * [[VecDot.ensureRegistered]]. */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registrations.ensure(spark, registrations)
 }

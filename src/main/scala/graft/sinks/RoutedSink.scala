@@ -60,7 +60,7 @@ object RoutedSink {
     enveloped.dropDuplicates(identityCols(enveloped))
 
   /**
-   * Lake compaction (VERDICT r5 #6): [[writeBatchIdempotent]] accretes one
+   * Lake compaction: [[writeBatchIdempotent]] accretes one
    * `batch_id=<id>` partition per micro-batch — correct for exactly-once, unbounded for a
    * long-lived stream (at 100× that is millions of small partitions and a metadata-bound
    * listing). `compactBatches` folds every `batch_id <= upTo` partition into a compacted
@@ -128,13 +128,13 @@ object RoutedSink {
   /**
    * Streaming delivery: foreachBatch doing DDL invalidation then the routed write.
    *
-   * DELIVERY GUARANTEE (ADVICE r3): with `idempotent = true` (default) the wiring is
-   * EXACTLY-ONCE to the lake — [[dedupByIdentity]] removes within-batch redelivery and
-   * [[writeBatchIdempotent]]'s batchId-keyed dynamic-overwrite partition makes a replayed
-   * micro-batch rewrite, not duplicate, its output. `idempotent = false` keeps the plain
-   * append layout (no batch_id column) and is AT-LEAST-ONCE: a restart between the append
-   * and the checkpoint commit appends the batch twice, and consumers must tolerate or
-   * identity-dedup at read time.
+   * DELIVERY GUARANTEE (a replayed micro-batch must not duplicate lake rows): with
+   * `idempotent = true` (default) the wiring is EXACTLY-ONCE to the lake —
+   * [[dedupByIdentity]] removes within-batch redelivery and [[writeBatchIdempotent]]'s
+   * batchId-keyed dynamic-overwrite partition makes a replayed micro-batch rewrite, not
+   * duplicate, its output. `idempotent = false` keeps the plain append layout (no batch_id
+   * column) and is AT-LEAST-ONCE: a restart between the append and the checkpoint commit
+   * appends the batch twice, and consumers must tolerate or identity-dedup at read time.
    */
   def start(enveloped: DataFrame, baseDir: String, checkpoint: String, sfDir: String,
             idempotent: Boolean = true): StreamingQuery = {

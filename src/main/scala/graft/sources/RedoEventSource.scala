@@ -118,12 +118,12 @@ object RedoEventSource {
    * records up to and including the exact stored `(scn, commitScn, rowId)` triple (the
    * inclusive-restart dedup); a fresh/overridden start reads `scn` itself.
    *
-   * BOUNDARY CONVENTION (ADVICE r3): for a configured `start.scn` / fresh start the
-   * default here is INCLUSIVE (`scn >= position`) — "start at SCN S" reading S itself is
-   * the least-surprising contract and can only re-deliver, never lose. The reference's
-   * CM-desupport mining query reads strictly after the position (`WHERE scn > ?`,
-   * OracleConnectorSQL2.java:6), so exact parity with that path is available as
-   * `inclusive = false`.
+   * BOUNDARY CONVENTION (a restart may re-deliver but must never lose): for a configured
+   * `start.scn` / fresh start the default here is INCLUSIVE (`scn >= position`) — "start at
+   * SCN S" reading S itself is the least-surprising contract and can only re-deliver, never
+   * lose. The reference's CM-desupport mining query reads strictly after the position
+   * (`WHERE scn > ?`, OracleConnectorSQL2.java:6), so exact parity with that path is
+   * available as `inclusive = false`.
    */
   final case class ResumePosition(scn: Long, commitScn: Long, rowId: String,
                                   skipBoundary: Boolean, inclusive: Boolean = true,

@@ -86,8 +86,8 @@ class EnvelopeApplySpec extends AnyFunSuite {
       // key 1 re-inserted in batch 2 AFTER eviction: its (commit_scn, scn, seq) version
       // must outrank the batch-1 tombstone in latestChanges
       EnvRow(2L, 3L, 1L, RedoEvent.Insert, Map("ID" -> "1", "NAME" -> "a2", "V" -> "11"), null))
-    val out = graft.engine.StreamGate.runTwoBatches(spark,
-        Encoders.product[EnvRow], "env_apply_evict_sink", b1, b2) { ds =>
+    val out = graft.engine.StreamGate.runBatches(spark,
+        Encoders.product[EnvRow], "env_apply_evict_sink", Seq(b1, b2)) { ds =>
       EnvelopeApply.applyStreaming(ds.toDF(), schema).toDF()
     }
     val merged = EnvelopeApply.applyChanges(snapshot,
@@ -106,8 +106,8 @@ class EnvelopeApplySpec extends AnyFunSuite {
     // the choice to max_by encounter order where V's update could silently vanish.
     val b1 = Seq(EnvRow(1L, 5L, 1L, RedoEvent.Update, Map("ID" -> "1", "NAME" -> "n5"), Map("ID" -> "1")))
     val b2 = Seq(EnvRow(1L, 3L, 1L, RedoEvent.Update, Map("ID" -> "1", "V" -> "77"), Map("ID" -> "1")))
-    val out = graft.engine.StreamGate.runTwoBatches(spark,
-        Encoders.product[EnvRow], "env_apply_late_sink", b1, b2) { ds =>
+    val out = graft.engine.StreamGate.runBatches(spark,
+        Encoders.product[EnvRow], "env_apply_late_sink", Seq(b1, b2)) { ds =>
       EnvelopeApply.applyStreaming(ds.toDF(), schema).toDF()
     }
     val merged = EnvelopeApply.applyChanges(snapshot,
@@ -129,8 +129,8 @@ class EnvelopeApplySpec extends AnyFunSuite {
       EnvRow(1L, 3L, 1L, RedoEvent.Update, Map("ID" -> "7", "REGION" -> "", "NAME" -> "k3"), Map("ID" -> "7")))
     val b2 = Seq(
       EnvRow(2L, 4L, 1L, RedoEvent.Update, Map("ID" -> "7", "REGION" -> null, "V" -> "42"), Map("ID" -> "7")))
-    val out = graft.engine.StreamGate.runTwoBatches(spark,
-        Encoders.product[EnvRow], "env_apply_nullkey_sink", b1, b2) { ds =>
+    val out = graft.engine.StreamGate.runBatches(spark,
+        Encoders.product[EnvRow], "env_apply_nullkey_sink", Seq(b1, b2)) { ds =>
       EnvelopeApply.applyStreaming(ds.toDF(), schema).toDF()
     }
     // three distinct keyed states, and batch 2's update landed on k1's state (NAME kept)

@@ -63,7 +63,7 @@ class PackedArgmaxSpec extends AnyFunSuite {
     val s = graft.SparkTestSession.spark
     import s.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.VecDot.ensureRegistered(s)
+    graft.functions.Registrations.ensure(s)
     val bound = 1L << 32
     // 64 components of 2^13 exactly: |v|² = 64·2^26 = 2^32 — ON the bound, passes
     val atBound = Seq(1L).toDF("vec_id")
@@ -87,7 +87,7 @@ class PackedArgmaxSpec extends AnyFunSuite {
     val s = graft.SparkTestSession.spark
     import s.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.VecDot.ensureRegistered(s)
+    graft.functions.Registrations.ensure(s)
     val nul = Seq(1L).toDF("vec_id")
       .withColumn("qv", lit(null).cast("array<bigint>"))
     val e = intercept[Exception] { Similarity.guardDotMagnitude(nul, "qv").collect() }

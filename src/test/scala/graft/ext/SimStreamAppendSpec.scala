@@ -25,7 +25,7 @@ class SimStreamAppendSpec extends AnyFunSuite {
   /** The spec's own milli-quantized corpus (mirrors the oracle's trunc(x*1000) scan). */
   private def milli(s: SparkSession): DataFrame = {
     import s.implicits._
-    graft.functions.VecDot.ensureRegistered(s)
+    graft.functions.Registrations.ensure(s)
     graft.engine.Tables(s, dir, "embeddings")
       .select($"vec_id",
         transform($"embedding", x => (x.cast("double") * 1000).cast("long")).as("qv"))

@@ -87,7 +87,7 @@ class TextScanSpec extends AnyFunSuite {
     val s = graft.SparkTestSession.spark
     import s.implicits._
     import org.apache.spark.sql.functions._
-    TextLangIdScan.ensureRegistered(s)
+    graft.functions.Registrations.ensure(s)
     val docs = graft.engine.Tables(s, "/root/testdata/sf0.001", "documents").limit(400)
     val toks = TextOps.tokens($"text")
     def score(words: Seq[String]) =
@@ -115,11 +115,10 @@ class TextScanSpec extends AnyFunSuite {
   }
 
   test("text_tri_rep equals the exploded md5-hash-grouped Column form, incl. <3-token nulls") {
-    import graft.functions.TextTriRep
     val s = graft.SparkTestSession.spark
     import s.implicits._
     import org.apache.spark.sql.functions._
-    TextTriRep.ensureRegistered(s)
+    graft.functions.Registrations.ensure(s)
     // real corpus slice PLUS hostile rows: <3 tokens (must be NULL/absent), exact
     // repeats, all-same-token (max repetition), multi-byte tokens, separators
     val hostile = Seq("", "a", "a b", "a b c", "a b a b a b a b", "x x x x x",
@@ -148,7 +147,7 @@ class TextScanSpec extends AnyFunSuite {
     val s = graft.SparkTestSession.spark
     import s.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.TextScan.ensureRegistered(s)
+    graft.functions.Registrations.ensure(s)
     val docs = graft.engine.Tables(s, "/root/testdata/sf0.001", "documents").limit(400)
     val toks = TextOps.tokens($"text")
     val old = docs.select($"doc_id",

@@ -16,7 +16,7 @@ class VecDotSpec extends AnyFunSuite {
   test("vec_dot equals the aggregate(zip_with) fold on 500 seeded vectors") {
     val spark = graft.SparkTestSession.spark
     import spark.implicits._
-    VecDot.ensureRegistered(spark)
+    Registrations.ensure(spark)
     val rnd = new scala.util.Random(42)
     val rows = Seq.fill(500)(
       (Array.fill(64)(rnd.nextDouble() * 2 - 1), Array.fill(64)(rnd.nextDouble() * 2 - 1)))
@@ -31,7 +31,7 @@ class VecDotSpec extends AnyFunSuite {
   test("vec_dot preserves the fold's null algebra: null input, null element, length mismatch") {
     val spark = graft.SparkTestSession.spark
     import spark.implicits._
-    VecDot.ensureRegistered(spark)
+    Registrations.ensure(spark)
     val df = Seq(
       (Array[java.lang.Double](1.0, 2.0), Array[java.lang.Double](3.0, 4.0)), // 11.0
       (null, Array[java.lang.Double](1.0)), // null input
@@ -50,7 +50,7 @@ class VecDotSpec extends AnyFunSuite {
   test("long-array vec_dot equals the ANSI HOF fold (exact integer path)") {
     val spark = graft.SparkTestSession.spark
     import spark.implicits._
-    VecDot.ensureRegistered(spark)
+    Registrations.ensure(spark)
     val rnd = new scala.util.Random(7)
     val rows = Seq.fill(200)(
       (Array.fill(64)(rnd.nextInt(2001) - 1000L), Array.fill(64)(rnd.nextInt(2001) - 1000L)))
@@ -76,7 +76,7 @@ class VecDotSpec extends AnyFunSuite {
   test("integer-cast embeddings: simsearch scores unchanged by the native path (spot)") {
     val spark = graft.SparkTestSession.spark
     import spark.implicits._
-    VecDot.ensureRegistered(spark) // Similarity.dot is a pure combinator; callers register
+    Registrations.ensure(spark)
     // end-to-end spot-check against the HOF formulation on real embedding data
     val emb = graft.engine.Tables(spark, "/root/testdata/sf0.001", "embeddings")
       .select($"vec_id", org.apache.spark.sql.functions.transform($"embedding",

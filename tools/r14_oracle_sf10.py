@@ -31,6 +31,8 @@ import time
 
 import duckdb
 
+from duckmem import memory_limit
+
 K = 6
 W = 4
 B = 256
@@ -105,7 +107,7 @@ def main():
             os.remove(dbpath + suffix)
     con = duckdb.connect(dbpath)
     con.execute(f"PRAGMA threads={os.cpu_count()}")
-    con.execute("PRAGMA memory_limit='48GB'")
+    con.execute(f"PRAGMA memory_limit='{memory_limit()}'")
     os.makedirs("target/duck_tmp", exist_ok=True)
     con.execute("PRAGMA temp_directory='target/duck_tmp'")
 
